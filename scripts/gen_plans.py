@@ -94,10 +94,10 @@ SECTIONS: list[tuple[str, str | None, str]] = [
         "x_semdedup",
         "Cluster-scoped pairs behind a centroid_id equi-join; nlist"
         " scales with the corpus so in-cluster pair work stays"
-        " bounded. Assignment (r10): in-row greatest() argmax over"
-        " ≤64 collected centroids — no crossJoin, no SortAggregate;"
-        " above 64 the broadcast crossJoin + max_by aggregate"
-        " remains (identical tie semantics, pinned by test).",
+        " bounded. Assignment: in-row array_max over the centroid"
+        " matrix broadcast as ONE row, for every nlist — no join"
+        " fan-out, no SortAggregate, no driver collect (max_by tie"
+        " semantics, pinned by test).",
     ),
     (
         "x_unigram_logprob",
@@ -186,9 +186,9 @@ SECTIONS: list[tuple[str, str | None, str]] = [
         "y_ann_delta_ingest",
         "y_ann_delta_ingest",
         "Incremental ANN ingest (r8): delta assignment is an IN-ROW"
-        " cosine-argmax over the collected centroids (r10 — no join,"
-        " no aggregate, no exchange; never touches the standing"
-        " corpus); the merged index searches through the identical"
+        " cosine-argmax over the one-row broadcast centroid matrix"
+        " (no join fan-out, no aggregate, no exchange; never touches"
+        " the standing corpus); the merged index searches through the identical"
         " probe/bucket-join/rerank plan as a fresh one"
         " (ivf_search_assigned). Ingest anchor flat per delta vector"
         " at 100× index size.",

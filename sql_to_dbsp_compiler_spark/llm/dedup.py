@@ -40,11 +40,20 @@ def _bind(value: Column, body) -> Column:
     return F.element_at(F.transform(F.array(value), body), 1)
 
 
+def _gram_starts(ws: Column, n: int) -> Column:
+    """0-based start offsets of the word n-grams of ``ws``: empty when
+    it has fewer than n words or is NULL (sequence(0, -1) would count
+    DOWN to [0, -1] and read past the end of the array)."""
+    return F.when(F.size(ws) >= n, F.sequence(F.lit(0), F.size(ws) - n)).otherwise(
+        F.array().cast("array<int>")
+    )
+
+
 def shingles(text: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles, as an array column (pure JVM)."""
 
     def grams(ws: Column) -> Column:
-        idx = F.sequence(F.lit(0), F.greatest(F.size(ws) - n, F.lit(-1)))
+        idx = _gram_starts(ws, n)
         gram = lambda i: F.concat_ws(" ", *[F.element_at(ws, i + k + 1) for k in range(n)])  # noqa: E731
         return F.array_distinct(F.transform(idx, gram))
 
@@ -63,7 +72,7 @@ def shingle_hashes(text: Column, n: int = 3) -> Column:
     building millions of short strings; longs are 10x cheaper)."""
 
     def grams(hs: Column) -> Column:
-        idx = F.sequence(F.lit(0), F.greatest(F.size(hs) - n, F.lit(-1)))
+        idx = _gram_starts(hs, n)
         combine = lambda i: reduce(  # noqa: E731
             lambda acc, k: acc.bitwiseXOR(
                 _rot(F.element_at(hs, i + k + 1), (k * 21) % 63 + 1)
@@ -117,6 +126,9 @@ def minhash_signatures_df(
     persist() barrier the old shape needed to stop CollapseProject
     re-shingling per min expression becomes unnecessary (the explode
     is a Generate node, a natural barrier)."""
+    # explode drops docs with no shingles (NULL text, fewer than
+    # shingle_n words): they have no signature and match nothing, as
+    # in the oracles' unnest
     sh = spread_by(df, id_col).select(
         F.col(id_col), F.explode(shingle_hashes(F.col(text_col), shingle_n)).alias("__h")
     )
@@ -444,15 +456,16 @@ def hamming_filtered_bucket_pairs(
         .where((F.size("xs") >= 2) & (F.size("xs") <= max_bucket))
     )
     if nwords is not None:
-        # Width guard (ADVICE r9), evaluated ONCE PER BUCKET, not per
-        # candidate pair: if a caller ever passes nwords wider than the
-        # signature arrays, element_at in the unrolled popcount would
-        # return null, the hamming sum would go null, and the
-        # `<= max_hamming` filter would silently drop EVERY pair
-        # (recall collapses to zero with no error). Fail loudly instead.
+        # Width guard (ADVICE r9/r10), evaluated ONCE PER BUCKET over
+        # every member, not per candidate pair: if a caller ever passes
+        # nwords wider than some signature array, element_at in the
+        # unrolled popcount would return null (ANSI off: the hamming sum
+        # goes null and the `<= max_hamming` filter silently drops its
+        # pairs) or raise a bare index error (ANSI on). Fail loudly and
+        # by name instead.
         buckets = buckets.where(
             F.assert_true(
-                F.size(F.element_at("xs", 1)["s"]) >= nwords,
+                F.forall("xs", lambda x: F.size(x["s"]) >= nwords),
                 F.lit(
                     f"hamming_filtered_bucket_pairs: signature narrower "
                     f"than nwords={nwords} words"
@@ -689,6 +702,9 @@ def minhash_signatures_md5(
     # 1.37 s → 0.78 s for the signature stage alone; output verified
     # IDENTICAL row-for-row (integer min is order- and duplicate-
     # insensitive, so dropping the array never changes sig).
+    # explode drops docs with no shingles (NULL text, fewer than
+    # shingle_n words): they have no signature and match nothing, as
+    # in the oracles' unnest
     sh = (spread_by(df, id_col) if spread else df).select(
         F.col(id_col), F.explode(shingles(F.col(text_col), shingle_n)).alias("__sg")
     )

@@ -89,6 +89,61 @@ def brute_force_topk(
     ).withColumn("rn", F.col("rn").cast("bigint"))
 
 
+def _centroid_scores(rows: DataFrame, centroids: DataFrame, vec: str, nrm: str) -> DataFrame:
+    """``rows`` plus ``__cs``: one ``(c, n, i)`` struct per centroid,
+    scored in-row. The ``(centroid_id, cvec)`` table is folded into ONE
+    broadcast row ``array<struct<centroid_id, cvec, norm>>`` (each norm
+    computed once, by the same sqrt(dot(cvec, cvec))), so the cross
+    join adds no rows and the scoring expression has a constant size
+    whatever the centroid count: no join fan-out, no aggregate and no
+    exchange on the ``rows`` side, and no driver collect.
+
+    ``c`` keeps the dot/(nv*nc) operation order, so it is bit-identical
+    to cosine(); ``n = -centroid_id`` makes struct ordering break exact
+    ties to the LOWEST id, and NaN orders greatest — the semantics of
+    the max_by / ROW_NUMBER formulations and the DuckDB oracles. An
+    empty centroid table fails at run time (raise_error)."""
+    # coalesce(1): the fold then needs no shuffle (a one-partition
+    # child already satisfies the global aggregate's distribution)
+    m = centroids.coalesce(1).select(
+        F.struct(
+            "centroid_id",
+            "cvec",
+            F.sqrt(dot(F.col("cvec"), F.col("cvec"))).alias("norm"),
+        ).alias("__m")
+    ).agg(F.collect_list("__m").alias("__m"))
+    m = m.select(
+        F.when(F.size("__m") > 0, F.col("__m"))
+        .otherwise(F.raise_error(F.lit("empty centroid table")))
+        .alias("__m")
+    )
+    scores = F.transform(
+        F.col("__m"),
+        lambda c: F.struct(
+            (dot(F.col(vec), c["cvec"]) / (F.col(nrm) * c["norm"])).alias("c"),
+            (-c["centroid_id"]).alias("n"),
+            c["centroid_id"].alias("i"),
+        ),
+    )
+    return rows.crossJoin(F.broadcast(m)).select(*rows.columns, scores.alias("__cs"))
+
+
+def _probe_routes(
+    queries: DataFrame, centroids: DataFrame, nprobe: int, vec_col: str, query_id_col: str
+) -> DataFrame:
+    """``(query_id, qvec, __nq, centroid_id)``: each query's nprobe
+    max-cosine centroids (ties to the lowest id), the top of its
+    descending-sorted :func:`_centroid_scores`. ||q|| is computed once
+    per query and rides along for the rerank."""
+    q = queries.select(
+        F.col(query_id_col), as_double_array(F.col(vec_col)).alias("qvec")
+    ).withColumn("__nq", F.sqrt(dot(F.col("qvec"), F.col("qvec"))))
+    top = F.slice(F.sort_array(F.col("__cs"), asc=False), 1, nprobe)
+    return _centroid_scores(q, centroids, "qvec", "__nq").select(
+        query_id_col, "qvec", "__nq", F.explode(top).alias("__p")
+    ).select(query_id_col, "qvec", "__nq", F.col("__p.i").alias("centroid_id"))
+
+
 def ivf_assign_to(
     corpus: DataFrame,
     centroids: DataFrame,
@@ -96,100 +151,23 @@ def ivf_assign_to(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Assign every corpus vector to its max-cosine centroid from a
-    GIVEN ``(centroid_id, cvec)`` table (collected to the driver — the
-    centroid table is tiny by construction). Cosine-argmax with
+    GIVEN ``(centroid_id, cvec)`` table. Cosine-argmax with
     centroid_id tie-break is deterministic and exactly reproducible in
     SQL, which is what lets trained-centroid IVF be oracle-gated:
     persist the centroids, re-assign from the persisted values on both
     engines.
 
-    Shape (r10, VERDICT r9 #5): the argmax is computed IN-ROW over the
-    collected centroid literals — ``greatest`` over per-centroid
-    (csim, -centroid_id, centroid_id) structs — instead of a
-    crossJoin to nlist rows per vector followed by a max_by aggregate.
-    The old max_by carried a struct buffer, which HashAggregate cannot
-    hold mutably, so every assignment paid a SortAggregate (two sorts
-    around an exchange of the corpus×nlist stream, each row carrying
-    the vector payload). In-row there is NO join, NO aggregate and NO
-    exchange: one narrow projection over the corpus, the same nlist
-    dot-folds per row it always cost. Bit-identity: the collected
-    centroid doubles are the exact stored values; per-centroid norms
-    are constant-folded from the SAME sqrt(dot(cvec,cvec)) expression;
-    each csim keeps the dot/(nv*nc) operation order; and struct
-    ``greatest`` uses the same ordering as max_by's struct ordering —
-    NaN greatest, ties to the lowest centroid_id (probed empirically
-    and pinned by test_assign_in_row_argmax_matches_aggregate).
-
-    The in-row form is used up to 64 centroids (every IVF path here:
-    nlist=16). Past that — SemDeDup scales nlist with the corpus, so
-    at 100 TB it is thousands — the literal expression tree would grow
-    O(nlist·dim) and planning/codegen would dominate; the broadcast
-    crossJoin + max_by aggregate (identical ordering semantics, proven
-    by the same test) remains the right shape there."""
-    rows = sorted(
-        centroids.select("centroid_id", "cvec").collect(),
-        key=lambda r: r["centroid_id"],
-    )
-    if not rows:
-        raise ValueError("ivf_assign_to: empty centroid table")
+    Shape: ``array_max`` over the in-row :func:`_centroid_scores` — one
+    narrow projection over the corpus for every centroid count (no
+    join fan-out, aggregate or exchange on the corpus side), the same
+    nlist dot-folds per row any formulation pays. Pinned against the
+    crossJoin + max_by formulation, including ties, NaN, Inf and 128
+    centroids, by test_assign_in_row_argmax_matches_aggregate."""
     c = corpus.select(
         F.col(id_col), as_double_array(F.col(vec_col)).alias("vec")
     ).withColumn("__nv", F.sqrt(dot(F.col("vec"), F.col("vec"))))
-
-    if len(rows) <= 64:
-        # The whole argmax expression is built as ONE SQL string and
-        # parsed JVM-side: constructing it Column-by-Column costs a
-        # py4j round trip per literal/node (~2.3 s of DRIVER time per
-        # call for 16 centroids × 64 dims — measured; it erased the
-        # executor-side win). Python float repr round-trips to the
-        # identical IEEE double under Double.parseDouble, and the SQL
-        # text spells the exact aggregate(zip_with(...)) fold dot()
-        # builds, so the parsed tree and every emitted value are
-        # unchanged (pinned by test_assign_in_row_argmax_matches_
-        # aggregate and the oracle sweep).
-        def _d(x: float) -> str:
-            return repr(float(x)) + "D"
-
-        def _arr(vals) -> str:
-            return "array(" + ", ".join(_d(v) for v in vals) + ")"
-
-        def cand_sql(r) -> str:
-            arr = _arr(r["cvec"])
-            dot_v = (
-                f"aggregate(zip_with(vec, {arr}, (x, y) -> x * y), "
-                f"0.0D, (acc, v) -> acc + v)"
-            )
-            nc = (
-                f"sqrt(aggregate(zip_with({arr}, {arr}, (x, y) -> x * y), "
-                f"0.0D, (acc, v) -> acc + v))"
-            )
-            cid = int(r["centroid_id"])
-            return (
-                f"named_struct('c', ({dot_v} / (__nv * {nc})), "
-                f"'n', {-cid}, 'i', {cid})"
-            )
-
-        cands = [cand_sql(r) for r in rows]
-        best = F.expr(
-            cands[0] if len(cands) == 1 else "greatest(" + ", ".join(cands) + ")"
-        )
-        return c.select(id_col, "vec", best["i"].alias("centroid_id"))
-
-    ct = centroids.withColumn("__nc", F.sqrt(dot(F.col("cvec"), F.col("cvec"))))
-    scored = c.crossJoin(F.broadcast(ct)).select(
-        id_col,
-        "vec",
-        "centroid_id",
-        (dot(F.col("vec"), F.col("cvec")) / (F.col("__nv") * F.col("__nc"))).alias("csim"),
-    )
-    best = scored.groupBy(id_col).agg(
-        F.max_by(
-            F.struct("vec", "centroid_id"),
-            F.struct(F.col("csim"), (-F.col("centroid_id")).alias("nid")),
-        ).alias("b")
-    )
-    return best.select(
-        id_col, F.col("b.vec").alias("vec"), F.col("b.centroid_id").alias("centroid_id")
+    return _centroid_scores(c, centroids, "vec", "__nv").select(
+        id_col, "vec", F.array_max("__cs")["i"].alias("centroid_id")
     )
 
 
@@ -293,8 +271,8 @@ def ivf_train_kmeans(
     # assign_corpus=False skips building the assignment frame
     # entirely — callers that only want the centroids (x_semdedup
     # persists them and re-assigns inside semdedup_drops) otherwise
-    # pay the in-row-argmax plan construction + centroid collect for
-    # a frame they discard (r10). NB the Lloyd loop's local `assign`
+    # pay the assignment plan construction for a frame they discard
+    # (r10). NB the Lloyd loop's local `assign`
     # array shadows any same-named parameter.
     if not assign_corpus:
         return centroids, None
@@ -580,33 +558,18 @@ def ivf_search_assigned(
     query_id_col: str = "query_id",
 ) -> DataFrame:
     """The SEARCH stage of IVF over a pre-assigned index
-    (id, vec, centroid_id): probe routing by broadcast cosine-argmax,
+    (id, vec, centroid_id): probe routing by the in-row centroid
+    scores (:func:`_probe_routes`, shared with ivf_query_store),
     bucket equi-join, exact rerank. Split out of :func:`ivf_topk` so
     an index maintained INCREMENTALLY (persisted standing assignment +
     per-ingest delta assignment — y_ann_delta_ingest) searches through
     the identical plan as a freshly-built one."""
-    # ||q|| is computed once per query row and rides through the probe
-    # window; ||v|| once per index row BELOW the bucket join — the
-    # rerank then runs one dot() fold per (query, vector) instead of
-    # three. dot/(nq*nv) keeps the exact operation order of
+    # ||v|| once per index row BELOW the bucket join — the rerank then
+    # runs one dot() fold per (query, vector) instead of three.
+    # dot/(nq*nv) keeps the exact operation order of
     # dot/(sqrt(qq)*sqrt(vv)) (cosine_neardup_pairs' bit-identity
     # argument), so sim and the top-k tie-breaks are unchanged.
-    q = queries.select(
-        F.col(query_id_col), as_double_array(F.col(vec_col)).alias("qvec")
-    ).withColumn("__nq", F.sqrt(dot(F.col("qvec"), F.col("qvec"))))
-    ct = centroids.withColumn("__nc", F.sqrt(dot(F.col("cvec"), F.col("cvec"))))
-    probes = topk_per_group(
-        q.crossJoin(F.broadcast(ct)).select(
-            query_id_col,
-            "qvec",
-            "__nq",
-            "centroid_id",
-            (dot(F.col("qvec"), F.col("cvec")) / (F.col("__nq") * F.col("__nc"))).alias("csim"),
-        ),
-        [query_id_col],
-        [F.col("csim").desc(), F.col("centroid_id")],
-        nprobe,
-    ).select(query_id_col, "qvec", "__nq", "centroid_id")
+    probes = _probe_routes(queries, centroids, nprobe, vec_col, query_id_col)
     idx = assigned.withColumn("__nv", F.sqrt(dot(F.col("vec"), F.col("vec"))))
     scored = probes.join(idx, "centroid_id").select(
         query_id_col,
@@ -832,30 +795,13 @@ def ivf_query_store(
     query_id_col: str = "query_id",
 ) -> DataFrame:
     """Query a partitioned IVF store: route queries to their nprobe
-    nearest centroids (broadcast of the tiny centroid table), prune
-    the vector scan to the union of probed centroid partitions (a
-    literal IN filter → partition pruning, verifiable via
-    ``inputFiles()``), then per-query exact rerank within probed
-    buckets only."""
+    nearest centroids (:func:`_probe_routes`, the same in-row scoring
+    as assignment and ivf_search_assigned), prune the vector scan to
+    the union of probed centroid partitions (a literal IN filter →
+    partition pruning, verifiable via ``inputFiles()``), then
+    per-query exact rerank within probed buckets only."""
     centroids = spark.read.parquet(f"{path}/_centroids")
-    # same norm hoisting as ivf_search_assigned: bit-identical scores,
-    # one dot() fold per scored pair
-    q = queries.select(
-        F.col(query_id_col), as_double_array(F.col(vec_col)).alias("qvec")
-    ).withColumn("__nq", F.sqrt(dot(F.col("qvec"), F.col("qvec"))))
-    ct = centroids.withColumn("__nc", F.sqrt(dot(F.col("cvec"), F.col("cvec"))))
-    probes = topk_per_group(
-        q.crossJoin(F.broadcast(ct)).select(
-            query_id_col,
-            "qvec",
-            "__nq",
-            "centroid_id",
-            (dot(F.col("qvec"), F.col("cvec")) / (F.col("__nq") * F.col("__nc"))).alias("csim"),
-        ),
-        [query_id_col],
-        [F.col("csim").desc(), F.col("centroid_id")],
-        nprobe,
-    ).select(query_id_col, "qvec", "__nq", "centroid_id")
+    probes = _probe_routes(queries, centroids, nprobe, vec_col, query_id_col)
     # literal probe set (tiny: ≤ |queries|·nprobe ids) → partition pruning
     probe_ids = sorted({r["centroid_id"] for r in probes.select("centroid_id").distinct().collect()})
     # read through the tombstone view (ivf_store_live): a store that

@@ -646,3 +646,56 @@ def test_span_excise_keep_first_and_stitching(spark, tmp_path):
     assert out[1].clean_text == "foxtrot golf hotel india juliet kilo"
     assert out[2].removed_tokens == 0 and out[3].removed_tokens == 0
     assert out[4].removed_tokens == 0 and out[4].clean_text == docs[4][1]
+
+
+def test_minhash_signatures_skip_null_and_short_docs(spark):
+    """Both signature builders give NO row to a doc without shingles —
+    NULL text, empty text, or fewer than shingle_n words — the same as
+    the oracles' unnest over an empty range. Such a doc can be no one's
+    near-duplicate (a shared placeholder signature would make every
+    NULL doc a duplicate of every other). The corpus data has none of
+    these docs, so the edge is pinned here."""
+    from sql_to_dbsp_compiler_spark.llm.dedup import (
+        minhash_signatures_df,
+        minhash_signatures_md5,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (1, None),
+            (2, None),
+            (3, "two words"),
+            (4, ""),
+            (5, "   "),
+            (6, "one two three four"),
+            (7, "a b c"),
+        ],
+        "doc_id bigint, text string",
+    )
+    for build in (minhash_signatures_df, minhash_signatures_md5):
+        sigs = {r.doc_id: r.sig for r in build(docs, "doc_id", "text", 16, 3).collect()}
+        assert set(sigs) == {6, 7}, build.__name__
+        # the short docs' absence does not disturb the others' signatures
+        alone = build(docs.where(F.col("doc_id") >= 6), "doc_id", "text", 16, 3)
+        assert {r.doc_id: r.sig for r in alone.collect()} == sigs, build.__name__
+
+
+def test_hamming_width_guard_checks_every_bucket_member(spark):
+    """The nwords width guard must see EVERY member of a bucket, not
+    just the first: a narrower second member must fail with the
+    guard's own error instead of losing its pairs (ANSI off) or
+    raising a bare index error (ANSI on)."""
+    import pytest
+
+    from sql_to_dbsp_compiler_spark.llm.dedup import hamming_filtered_bucket_pairs
+
+    banded = spark.createDataFrame(
+        [(1, 7, [1, 2]), (2, 7, [1]), (3, 7, [1, 2])],
+        "id bigint, b int, s array<bigint>",
+    )
+    with pytest.raises(Exception, match="signature narrower than nwords=2"):
+        hamming_filtered_bucket_pairs(banded, ["b"], "id", "s", 3, nwords=2).collect()
+    # all members wide enough: the guard passes and the pairs survive
+    ok = banded.where(F.col("id") != 2)
+    got = hamming_filtered_bucket_pairs(ok, ["b"], "id", "s", 3, nwords=2).collect()
+    assert len(got) == 1

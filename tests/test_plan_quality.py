@@ -233,6 +233,37 @@ def test_bloom_bits_broadcast_no_probe_shuffle_join(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
+def test_ivf_assign_128_centroids_is_in_row(spark, sf_dir):
+    """ivf_assign_to at nlist=128 (where SemDeDup's nlist = rows // 300
+    lands as the corpus grows): the corpus side is a narrow projection
+    over ONE broadcast centroid-matrix row — no SortAggregate, no
+    Python, and no aggregate or shuffle Exchange outside the broadcast
+    build side."""
+    from sql_to_dbsp_compiler_spark.llm.similarity import ivf_train_kmeans
+    from sql_to_dbsp_compiler_spark.sources import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    cent, assigned = ivf_train_kmeans(emb, nlist=128)
+    assert cent.count() == 128
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        assigned._jdf.queryExecution(), "simple"
+    )
+    assert "SortAggregate" not in plan, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    # drop every subtree below a BroadcastExchange (the centroid side)
+    corpus_side, cut = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if cut is not None and depth > cut:
+            continue
+        cut = depth if "BroadcastExchange" in line else None
+        corpus_side.append(line)
+    assert any("embeddings.parquet" in l for l in corpus_side), plan
+    for line in corpus_side:
+        assert "Aggregate(" not in line, plan
+        assert "Exchange" not in line.replace("BroadcastExchange", ""), plan
+
+
 def test_semdedup_assignment_materialized_once(spark, sf_dir):
     """x_semdedup: centroid assignment must be computed once (lazy
     checkpoint → the pair join and the size guard scan the same RDD)

@@ -698,14 +698,16 @@ def test_ivf_store_vector_update_composes(spark, sf_dir, tmp_path):
 
 
 def test_assign_in_row_argmax_matches_aggregate(spark):
-    """r10 ivf_assign_to rewrite: the in-row greatest-struct argmax
-    must reproduce the old crossJoin + max_by aggregate EXACTLY —
-    including exact-tie centroids (duplicate cvec: lowest centroid_id
-    wins). A zero vector is NOT a reachable corner: under ANSI mode
-    the csim division raises DIVIDE_BY_ZERO identically in both
-    shapes, so the NaN tie-break path can only be probed with
-    literals (done during the r10 rewrite: greatest and max_by agree,
-    NaN greatest then lowest id)."""
+    """ivf_assign_to's in-row array_max argmax must reproduce the
+    crossJoin + max_by aggregate EXACTLY on every input: exact-tie
+    centroids (duplicate cvec: lowest centroid_id wins), a NaN
+    centroid and an Inf centroid (their csim is NaN, which orders
+    greatest), and a 128-centroid table (SemDeDup's nlist grows with
+    the corpus). A zero VECTOR is not a reachable corner: under
+    ANSI mode the csim division raises DIVIDE_BY_ZERO in both
+    shapes. An empty centroid table fails at run time."""
+    import numpy as np
+    import pytest
     from pyspark.sql import functions as F
 
     from sql_to_dbsp_compiler_spark.llm.similarity import (
@@ -714,50 +716,79 @@ def test_assign_in_row_argmax_matches_aggregate(spark):
         ivf_assign_to,
     )
 
-    corpus = spark.createDataFrame(
-        [
-            (1, [1.0, 0.0]),
-            (2, [0.0, 1.0]),
-            (3, [0.7, 0.7]),
-            (5, [-1.0, -1.0]),
-        ],
-        "vec_id bigint, embedding array<double>",
-    )
-    cent = spark.createDataFrame(
-        [
-            (0, [1.0, 0.1]),
-            (1, [0.1, 1.0]),
-            (2, [0.1, 1.0]),  # duplicate of 1 -> exact tie, lowest id wins
-        ],
-        "centroid_id int, cvec array<double>",
-    )
-    got = {
-        r["vec_id"]: r["centroid_id"]
-        for r in ivf_assign_to(corpus, cent).collect()
-    }
+    def frame(rows, schema):
+        # one slice: a tiny local table needs no parallelism
+        return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
-    # reference: the pre-r10 aggregate formulation, inline
-    c = corpus.select(
-        F.col("vec_id"), as_double_array(F.col("embedding")).alias("vec")
-    ).withColumn("__nv", F.sqrt(dot(F.col("vec"), F.col("vec"))))
-    ct = cent.withColumn("__nc", F.sqrt(dot(F.col("cvec"), F.col("cvec"))))
-    scored = c.crossJoin(F.broadcast(ct)).select(
-        "vec_id",
-        "centroid_id",
-        (dot(F.col("vec"), F.col("cvec")) / (F.col("__nv") * F.col("__nc"))).alias(
-            "csim"
-        ),
-    )
-    ref = {
-        r["vec_id"]: r["b"]
-        for r in scored.groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.col("centroid_id"),
-                F.struct(F.col("csim"), (-F.col("centroid_id")).alias("nid")),
-            ).alias("b")
+    def reference(corpus, cent):
+        # the crossJoin + max_by aggregate formulation, inline
+        c = corpus.select(
+            F.col("vec_id"), as_double_array(F.col("embedding")).alias("vec")
+        ).withColumn("__nv", F.sqrt(dot(F.col("vec"), F.col("vec"))))
+        ct = cent.withColumn("__nc", F.sqrt(dot(F.col("cvec"), F.col("cvec"))))
+        scored = c.crossJoin(F.broadcast(ct)).select(
+            "vec_id",
+            "centroid_id",
+            (dot(F.col("vec"), F.col("cvec")) / (F.col("__nv") * F.col("__nc"))).alias(
+                "csim"
+            ),
         )
-        .collect()
-    }
-    assert got == ref
+        return {
+            r["vec_id"]: r["b"]
+            for r in scored.groupBy("vec_id")
+            .agg(
+                F.max_by(
+                    F.col("centroid_id"),
+                    F.struct(F.col("csim"), (-F.col("centroid_id")).alias("nid")),
+                ).alias("b")
+            )
+            .collect()
+        }
+
+    def check(corpus_rows, cent_rows):
+        corpus = frame(corpus_rows, "vec_id bigint, embedding array<double>")
+        cent = frame(cent_rows, "centroid_id int, cvec array<double>")
+        got = {
+            r["vec_id"]: r["centroid_id"]
+            for r in ivf_assign_to(corpus, cent).collect()
+        }
+        assert got == reference(corpus, cent)
+        assert len(got) == len(corpus_rows)
+        return got
+
+    corpus2 = [
+        (1, [1.0, 0.0]),
+        (2, [0.0, 1.0]),
+        (3, [0.7, 0.7]),
+        (5, [-1.0, -1.0]),
+    ]
+    ties = [
+        (0, [1.0, 0.1]),
+        (1, [0.1, 1.0]),
+        (2, [0.1, 1.0]),  # duplicate of 1 -> exact tie, lowest id wins
+    ]
+    got = check(corpus2, ties)
     assert got[2] == 1  # exact tie between centroids 1 and 2 -> lowest id
+
+    # NaN / Inf centroids: csim is NaN for every vector, and NaN orders
+    # greatest, so the non-finite centroid wins everywhere
+    got = check(corpus2, ties + [(3, [float("nan"), 1.0])])
+    assert set(got.values()) == {3}
+    got = check(corpus2, ties + [(4, [float("inf"), 0.0])])
+    assert set(got.values()) == {4}
+
+    # 128 centroids (with one exact-tie pair) over 300 vectors
+    rng = np.random.RandomState(11)
+    C = rng.randn(128, 8)
+    C[77] = C[12]
+    V = np.vstack([rng.randn(297, 8), C[[12, 40, 127]]])
+    got = check(
+        [(i, [float(x) for x in v]) for i, v in enumerate(V)],
+        [(j, [float(x) for x in c]) for j, c in enumerate(C)],
+    )
+    assert got[297] == 12 and got[298] == 40 and got[299] == 127
+
+    empty = frame([], "centroid_id int, cvec array<double>")
+    corpus = frame(corpus2, "vec_id bigint, embedding array<double>")
+    with pytest.raises(Exception, match="empty centroid table"):
+        ivf_assign_to(corpus, empty).collect()
