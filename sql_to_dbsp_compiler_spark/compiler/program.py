@@ -43,7 +43,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.zset import WEIGHT, ZSet
+from ..plans.zset import WEIGHT, Integral, ZSet
 
 # ---------------------------------------------------------------------------
 # Parsing
@@ -5326,16 +5326,22 @@ class IncrementalProgram:
     """Maintain a program's views under input Z-set deltas.
 
     Semantics (the reference's incremental-circuit specification):
-    each ``step`` integrates the input deltas into per-table state,
-    evaluates every view on the new multiset snapshot, and returns
-    per-view output *deltas* — Z-sets whose integral always equals
-    the view evaluated on the integrated inputs. Scale note: state
-    snapshots are cached DataFrames partitioned by Spark; per-step
-    cost is a re-evaluation over state (naive incremental). For the
-    truly incremental per-operator path see plans/zset.py
-    (incremental_join, aggregate_linear) and streaming/ (Structured
-    Streaming state store), which this class intentionally does not
-    duplicate.
+    each ``step`` integrates the input deltas into per-table state and
+    returns per-view output *deltas* — Z-sets whose integral always
+    equals the view evaluated on the integrated inputs.
+
+    Cost: with ``optimize=True`` each recognized view runs an
+    incremental operator (plans/incremental.py) whose step reads the
+    input deltas, so its Spark work follows |delta|. Views the
+    recognizer leaves out (and recursive views) take the naive D∘Q∘I
+    path, which re-evaluates the view over the full table snapshots.
+    Table, view and join state are each an :class:`Integral`, so a
+    step appends its deltas rather than re-consolidating the state,
+    and a table with no delta in a step feeds the views a
+    ``ZSet.empty`` that Catalyst and the operators prune.
+    ``checkpoint_every`` is the Integral compaction cadence: raw
+    deltas are merged every ``checkpoint_every`` steps, and folded
+    into the consolidated state every ``checkpoint_every``² steps.
     """
 
     def __init__(
@@ -5356,13 +5362,18 @@ class IncrementalProgram:
         for v in self.program.views:
             if v.recursive:
                 _split_recursive_body(v)
-        # Integrated input state, one Z-set per table (starts empty).
-        self._state: dict[str, ZSet] = {
-            name: ZSet.from_df(_empty_table(spark, t))
+        # The statically empty delta of each table, for steps that do
+        # not change it.
+        self._zero: dict[str, ZSet] = {
+            name: ZSet.empty(ZSet.from_df(_empty_table(spark, t)).df)
             for name, t in self.program.tables.items()
         }
-        # Integrated state of each view, as a Z-set (starts empty).
-        self._view_state: dict[str, ZSet] = {}
+        # Integrated input state, one Integral per table (starts empty).
+        self._state: dict[str, Integral] = {
+            name: Integral(z, checkpoint_every) for name, z in self._zero.items()
+        }
+        # Integrated state of each view (created on its first step).
+        self._view_state: dict[str, Integral] = {}
         self._steps = 0
         self._checkpoint_every = checkpoint_every
         # observability: # of steps where a recursive view warm-started
@@ -5575,37 +5586,36 @@ class IncrementalProgram:
             for name, op in self._ops.items()
         }
 
-    def _empty_delta(self, name: str) -> ZSet:
-        return ZSet.from_df(_empty_table(self.spark, self.program.tables[name]))
-
     def step(self, deltas: dict[str, ZSet | DataFrame]) -> dict[str, ZSet]:
         """Apply one round of input deltas; returns per-view output
         deltas (consolidated Z-sets; empty Z-set => view unchanged)."""
-        in_deltas: dict[str, ZSet] = {}
-        for name, d in deltas.items():
+        # validate every delta before any state changes, so a bad step
+        # leaves the program as it was (a table's Integral reads a
+        # delta's columns only when it compacts)
+        for name in deltas:
             if name not in self._state:
                 raise KeyError(f"unknown table: {name}")
-            z = d if isinstance(d, ZSet) else ZSet.from_df(d)
-            in_deltas[name] = z
-            self._state[name] = self._state[name].add(z).consolidate()
+        in_deltas = {
+            name: d if isinstance(d, ZSet) else ZSet.from_df(d) for name, d in deltas.items()
+        }
+        for name, z in in_deltas.items():
+            want = {c.lower() for c, _ in self.program.tables[name].columns} | {WEIGHT}
+            if {c.lower() for c in z.df.columns} != want:
+                raise ValueError(f"delta for {name} has columns {z.df.columns}")
+        for name, z in in_deltas.items():
+            self._state[name].add(z)
         self._steps += 1
-        # Periodically checkpoint state lineage so plans don't grow
-        # unboundedly across steps (localCheckpoint truncates lineage).
-        if self._steps % self._checkpoint_every == 0:
-            self._state = {
-                n: ZSet(z.df.localCheckpoint(eager=False)) for n, z in self._state.items()
-            }
 
         if self._has_naive:
             # naive views read full snapshots of the tables
-            for name, z in self._state.items():
-                z.to_multiset_df().createOrReplaceTempView(name)
+            for name, integ in self._state.items():
+                integ.value().to_multiset_df().createOrReplaceTempView(name)
 
         out: dict[str, ZSet] = {}
 
         def delta_of(src: str) -> ZSet:
             if src in self.program.tables:
-                return in_deltas.get(src) or self._empty_delta(src)
+                return in_deltas.get(src) or self._zero[src]
             return out[src]  # earlier view's delta this step
 
         for view in self._exec_views:
@@ -5765,9 +5775,9 @@ class IncrementalProgram:
                 dd = delta_of(op.src).df.withColumn("__g", F.lit(0))
                 op.op.step(ZSet(dd))
                 snap = op.op.snapshot().select(*op.out_cols)
-                cur = (snap if snap.limit(1).count() > 0 else op.default_df).localCheckpoint(
-                    eager=False
-                )
+                # snap reads the aggregate's checkpointed state, so its
+                # lineage stays one step deep without a checkpoint here
+                cur = snap if snap.limit(1).count() > 0 else op.default_df
                 d = (
                     ZSet.from_df(cur)
                     if op.prev is None
@@ -5864,11 +5874,7 @@ class IncrementalProgram:
                     db = ZSet(
                         _apply_linear(delta_of(sub.src_b).df, sub.b_sel, sub.b_where)
                     ).consolidate()
-                    # checkpoint the (delta-sized) aggregate output
-                    # before the outer join: its touched-key union over
-                    # this lineage trips Spark's Union constraint
-                    # rewrite ("key not found") on upstream attrs
-                    jd = ZSet(sub.agg_op.step(db).df.localCheckpoint(eager=False))
+                    jd = sub.agg_op.step(db)
                     d = sub.join_op.step(d, jd)
                 d = ZSet(d.df.selectExpr(*op.out_exprs_sql, WEIGHT)).consolidate()
             elif isinstance(op, _GroupingSetsOp):
@@ -5919,32 +5925,35 @@ class IncrementalProgram:
                     snap_df = self.spark.sql(view.sql)
                 if view.columns is not None:
                     snap_df = snap_df.toDF(*view.columns)
-                # checkpoint BEFORE diffing so the diff and the stored
-                # state share one materialization (the naive path
-                # recomputes the full snapshot each step; without this
+                # The recomputed snapshot becomes a fresh Integral, whose
+                # base is compacted BEFORE diffing so the diff and the
+                # stored state share one materialization (without it
                 # the subtract and the next step's state would each
                 # re-execute the view query). Safe against the Spark
                 # 4.1 LogicalRDD dangling-constraint bug only because
                 # constraint propagation is disabled in session.py.
-                snap = ZSet(
-                    ZSet.from_df(snap_df).consolidate().df.localCheckpoint(eager=False)
-                )
+                integ = Integral(ZSet.from_df(snap_df), self._checkpoint_every)
+                snap = integ.value()
                 prev = self._view_state.get(view.name)
-                d = snap if prev is None else snap.subtract(prev).consolidate()
-                # store the recomputed snapshot directly (cheaper than
-                # prev + d, and identical by construction)
-                self._view_state[view.name] = snap
+                d = snap if prev is None else snap.subtract(prev.value()).consolidate()
+                self._view_state[view.name] = integ
                 if self._has_naive:
                     snap.to_multiset_df().createOrReplaceTempView(view.name)
                 out[view.name] = d
                 continue
 
-            prev = self._view_state.get(view.name)
-            integ = d if prev is None else prev.add(d).consolidate()
-            self._view_state[view.name] = ZSet(integ.df.localCheckpoint(eager=False))
+            integ = self._view_state.get(view.name)
+            if integ is None:
+                # the zero lives in the program's session, so the temp
+                # views below land in its catalog even when d comes from
+                # a foreachBatch (cloned-session) delta
+                zero = ZSet.empty(self.spark.createDataFrame([], d.df.schema))
+                integ = Integral(zero, self._checkpoint_every)
+                self._view_state[view.name] = integ
+            integ.add(d)
             if self._has_naive:
                 # downstream naive views may read this view's snapshot
-                integ.to_multiset_df().createOrReplaceTempView(view.name)
+                integ.value().to_multiset_df().createOrReplaceTempView(view.name)
             out[view.name] = d
         # hidden CTE views are circuit internals, not program outputs
         return {n: z for n, z in out.items() if n not in self._hidden}
@@ -5953,7 +5962,7 @@ class IncrementalProgram:
         """Current integrated value of a view (Z-set)."""
         if view not in self._view_state:
             raise ValueError("no steps applied yet")
-        return self._view_state[view]
+        return self._view_state[view].snapshot()
 
     def step_statements(self, text: str) -> dict[str, ZSet]:
         """Drive the circuits with TABLE-MODIFY STATEMENTS instead of
@@ -5979,7 +5988,7 @@ class IncrementalProgram:
                 raise KeyError(f"unknown table: {mut.table}")
             table = self.program.tables[mut.table]
             type_of = dict(table.columns)
-            state = self._state[mut.table]
+            state = self._state[mut.table].snapshot()
             if isinstance(mut, InsertDef):
                 delta = ZSet.from_df(
                     _table_from_inserts(self.spark, table, [mut])
@@ -6009,7 +6018,7 @@ class IncrementalProgram:
                     # relation sources read the INTEGRATED state of the
                     # referenced tables (multiset expansion of the Z-set)
                     resolve = {
-                        n: self._state[n].consolidate().to_multiset_df()
+                        n: self._state[n].value().to_multiset_df()
                         for n in self.program.tables
                         if n in self._state
                     }
@@ -6031,8 +6040,8 @@ class IncrementalProgram:
         import os
 
         os.makedirs(path, exist_ok=True)
-        for name, z in self._state.items():
-            z.consolidate().df.write.mode("overwrite").parquet(
+        for name, integ in self._state.items():
+            integ.snapshot().df.write.mode("overwrite").parquet(
                 os.path.join(path, f"table_{name}")
             )
         manifest = {
@@ -6094,9 +6103,9 @@ class IncrementalProgram:
         (other sources see their new full snapshots). Every first
         derivation of a new fact uses ≥1 changed-source delta row, so
         the seed is complete; distinct∘subtract keeps it sound."""
-        prev = self._view_state.get(view.name)
-        if prev is None:
+        if view.name not in self._view_state:
             return None
+        prev = self._view_state[view.name].value()
         if view.columns is not None:
             # the stored snapshot carries the RENAMED columns; the
             # recursive terms are written against the body's natural
@@ -6162,8 +6171,8 @@ class IncrementalProgram:
 
         def snapshot_df(s: str) -> DataFrame:
             if s in self.program.tables:
-                return self._state[s].to_multiset_df()
-            return self._view_state[s].to_multiset_df()
+                return self._state[s].value().to_multiset_df()
+            return self._view_state[s].value().to_multiset_df()
 
         seeds: list[DataFrame] = []
         T.createOrReplaceTempView(view.name)
@@ -6236,13 +6245,13 @@ class IncrementalProgram:
         or None on divergence."""
         spark = self.spark
         name = view.name
-        cols = [c for c in self._view_state[name].df.columns if c != WEIGHT]
+        cols = [c for c in self._view_state[name].value().df.columns if c != WEIGHT]
         all_srcs = {s for p in base_parts + rec_parts for s in refs(p)}
 
         def state_z(s: str) -> ZSet:
             if s in self.program.tables:
-                return self._state[s]
-            return self._view_state[s]
+                return self._state[s].value()
+            return self._view_state[s].value()
 
         NEW = {
             s: state_z(s).to_multiset_df().localCheckpoint(eager=False)
@@ -6443,8 +6452,8 @@ class IncrementalProgram:
 
         def state_z(s: str) -> ZSet:
             if s in self.program.tables:
-                return self._state[s]
-            return self._view_state[s]
+                return self._state[s].value()
+            return self._view_state[s].value()
 
         def signed_rows(s: str, sign: int) -> "DataFrame | None":
             """Deleted (sign<0) / inserted rows of s as a positive

@@ -15,11 +15,17 @@ DataFrames and exposes ``step(delta) -> delta``:
   state join shuffles |delta| keys against bucketed state — never
   rescans the input.
 - :class:`IncrementalJoin` — bilinear rule Δ(A⋈B) = ΔA⋈B + A⋈ΔB +
-  ΔA⋈ΔB; state sides would be bucketed on the join key at scale so
-  each term shuffles only the delta side.
+  ΔA⋈ΔB. Each side's state is an :class:`~.zset.Integral`, read as an
+  unconsolidated sum, and a term with a ``ZSet.empty`` side is
+  dropped: a step that changes one side joins only that side's delta
+  against the other side's state.
 
-State lineage is truncated with ``localCheckpoint`` every few steps
-(plans grow per step otherwise — same device as IncrementalProgram).
+Lineage: an ``Integral`` compacts (consolidates and checkpoints) its
+batches every ``checkpoint_every`` adds, the one compaction site for
+IncrementalJoin and IncrementalProgram state. The other operators
+still keep private state frames and truncate their lineage with their
+own ``localCheckpoint`` every ``checkpoint_every`` steps; under AQE
+that call is an action, not a lazy marker.
 """
 
 from __future__ import annotations
@@ -29,7 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .zset import WEIGHT, ZSet, incremental_join
+from .zset import WEIGHT, Integral, ZSet, incremental_join
 
 
 def _join_on_keys(df: DataFrame, keys: list[str], touched: DataFrame, how: str) -> DataFrame:
@@ -240,28 +246,24 @@ class IncrementalLinearAgg:
 
 class IncrementalJoin:
     """Two-input equi-join maintained by the bilinear delta rule;
-    output payload is an arbitrary projection of the joined row."""
+    output payload is an arbitrary projection of the joined row. Each
+    side's state is an :class:`Integral`, read unconsolidated;
+    ``checkpoint_every`` is its compaction cadence."""
 
     def __init__(self, on: Column, project: list[Column] | None = None, checkpoint_every: int = 8):
         self.on = on
         self.project = project
-        self._a: ZSet | None = None
-        self._b: ZSet | None = None
-        self._steps = 0
+        self._a: Integral | None = None
+        self._b: Integral | None = None
         self._checkpoint_every = checkpoint_every
 
     def step(self, da: ZSet, db: ZSet) -> ZSet:
         if self._a is None:
-            out = da.join(db, self.on)
-            self._a, self._b = da.consolidate(), db.consolidate()
-        else:
-            out = incremental_join(self._a, da, self._b, db, self.on)
-            self._a = self._a.add(da).consolidate()
-            self._b = self._b.add(db).consolidate()
-        self._steps += 1
-        if self._steps % self._checkpoint_every == 0:
-            self._a = ZSet(self._a.df.localCheckpoint(eager=False))
-            self._b = ZSet(self._b.df.localCheckpoint(eager=False))
+            self._a = Integral(ZSet.empty(da.df), self._checkpoint_every)
+            self._b = Integral(ZSet.empty(db.df), self._checkpoint_every)
+        out = incremental_join(self._a.value(), da, self._b.value(), db, self.on)
+        self._a.add(da)
+        self._b.add(db)
         if self.project is not None:
             out = out.map(*self.project)
         return out.consolidate()

@@ -16,6 +16,11 @@ chains stay shuffle-free until a `consolidate()`/`distinct()` forces
 a groupBy. That mirrors DBSP's laziness and is exactly the plan shape
 you want at scale: one consolidation shuffle at the end instead of
 one per operator.
+
+Integrated state is an :class:`Integral`: a few batches that a step
+appends to and that are compacted only every ``checkpoint_every``
+adds, so a step's Spark work follows its delta, not the state size.
+``ZSet.empty`` is the statically empty Z-set; joins and sums skip it.
 """
 
 from __future__ import annotations
@@ -31,19 +36,35 @@ WEIGHT = "__weight"
 @dataclass(frozen=True)
 class ZSet:
     df: DataFrame  # payload columns + WEIGHT column
+    # True only for a Z-set built by ``ZSet.empty``: statically empty,
+    # so ``add``/``join`` (and ``Integral.add``) skip it in Python.
+    is_empty: bool = False
 
     # ---- constructors -------------------------------------------------
     @staticmethod
     def from_df(df: DataFrame, weight: int = 1) -> "ZSet":
         return ZSet(df.withColumn(WEIGHT, F.lit(weight).cast("long")))
 
+    @staticmethod
+    def empty(like: DataFrame) -> "ZSet":
+        """The zero Z-set with ``like``'s columns. ``limit(0)`` makes the
+        emptiness visible to Catalyst (the plan folds to an empty local
+        relation, and joins/aggregates over it are pruned); an empty
+        ``createDataFrame`` alone is an opaque RDD scan."""
+        return ZSet(like.limit(0), is_empty=True)
+
     # ---- linear operators (no consolidation, no shuffle) --------------
     def neg(self) -> "ZSet":
         """DBSPNegateOperator: w → -w."""
-        return ZSet(self.df.withColumn(WEIGHT, -F.col(WEIGHT)))
+        return ZSet(self.df.withColumn(WEIGHT, -F.col(WEIGHT)), self.is_empty)
 
     def add(self, other: "ZSet") -> "ZSet":
         """DBSPSumOperator: Z-set addition = unionAll of weighted rows."""
+        # an empty left side still unions (Catalyst drops it): the sum
+        # must stay in self's session, whose temp views the naive path
+        # reads (a foreachBatch delta lives in a cloned session)
+        if other.is_empty:
+            return self
         return ZSet(self.df.unionByName(other.df))
 
     def subtract(self, other: "ZSet") -> "ZSet":
@@ -52,11 +73,11 @@ class ZSet:
 
     def map(self, *cols: Column) -> "ZSet":
         """DBSPMapOperator on payload columns (weight preserved)."""
-        return ZSet(self.df.select(*cols, F.col(WEIGHT)))
+        return ZSet(self.df.select(*cols, F.col(WEIGHT)), self.is_empty)
 
     def filter(self, cond: Column) -> "ZSet":
         """DBSPFilterOperator."""
-        return ZSet(self.df.where(cond))
+        return ZSet(self.df.where(cond), self.is_empty)
 
     def flat_map(self, col: Column, alias: str) -> "ZSet":
         """DBSPFlatMapOperator: explode an array payload column."""
@@ -82,9 +103,8 @@ class ZSet:
         a = self.df.withColumnRenamed(WEIGHT, "__wa")
         b = other.df.withColumnRenamed(WEIGHT, "__wb")
         joined = a.join(b, on)
-        return ZSet(
-            joined.withColumn(WEIGHT, F.col("__wa") * F.col("__wb")).drop("__wa", "__wb")
-        )
+        out = joined.withColumn(WEIGHT, F.col("__wa") * F.col("__wb")).drop("__wa", "__wb")
+        return ZSet.empty(out) if self.is_empty or other.is_empty else ZSet(out)
 
     # ---- nonlinear operators (consolidating: one shuffle) -------------
     def consolidate(self) -> "ZSet":
@@ -93,7 +113,8 @@ class ZSet:
         return ZSet(
             self.df.groupBy(*payload)
             .agg(F.sum(WEIGHT).alias(WEIGHT))
-            .where(F.col(WEIGHT) != 0)
+            .where(F.col(WEIGHT) != 0),
+            self.is_empty,
         )
 
     def distinct(self) -> "ZSet":
@@ -136,10 +157,79 @@ class ZSet:
 def incremental_join(a_prev: ZSet, da: ZSet, b_prev: ZSet, db: ZSet, on: Column) -> ZSet:
     """DBSPIncrementalJoinOperator: the bilinear delta rule
     Δ(A⋈B) = ΔA⋈B + A⋈ΔB + ΔA⋈ΔB, where A/B are the integrated
-    states BEFORE this step. Each term is an ordinary weighted join;
-    at scale A and B would be maintained as bucketed/indexed state so
-    each per-step term shuffles only the (small) delta side."""
+    states BEFORE this step. Each term is an ordinary weighted join.
+    A and B may be unconsolidated sums (``Integral.value()``): the join
+    distributes over +. A term with a ``ZSet.empty`` side is dropped in
+    Python, so a step that changes only A runs the single join ΔA⋈B."""
     return da.join(b_prev, on).add(a_prev.join(db, on)).add(da.join(db, on))
+
+
+class Integral:
+    """DBSPIntegralOperator as state: the running sum of a delta stream,
+    kept as a few batches so that a step appends instead of re-reading
+    the whole state (Structured Streaming's delta files plus snapshots).
+
+    Three levels, all paced by ``checkpoint_every``:
+
+    - raw delta batches, appended by ``add`` with no Spark job;
+    - runs: every ``checkpoint_every`` adds, the raw batches are merged
+      into one consolidated run, at a cost that follows those deltas;
+    - the base: every ``checkpoint_every``-th merge folds the runs into
+      the consolidated base, the one O(|state|) pass, paid once per
+      ``checkpoint_every``² adds.
+
+    ``value()`` is the unconsolidated sum of the levels. It is a valid
+    input for linear and bilinear consumers (a join distributes over
+    +). ``snapshot()`` is its consolidated form, built lazily: it runs
+    no job and changes nothing."""
+
+    def __init__(self, init: ZSet, checkpoint_every: int = 8):
+        """``init`` is the starting value: ``ZSet.empty`` for the zero,
+        else a Z-set that is compacted once into the base."""
+        if checkpoint_every < 1:
+            raise ValueError("checkpoint_every must be >= 1")
+        self._every = checkpoint_every
+        self._base = init if init.is_empty else _compact([init])
+        self._runs: list[ZSet] = []
+        self._batches: list[ZSet] = []
+
+    def add(self, delta: ZSet) -> None:
+        if delta.is_empty:
+            return
+        self._batches.append(delta)
+        if len(self._batches) < self._every:
+            return
+        self._runs.append(_compact(self._batches))
+        self._batches = []
+        if len(self._runs) == self._every:
+            self._base = _compact([self._base, *self._runs])
+            self._runs = []
+
+    def value(self) -> ZSet:
+        return _sum([self._base, *self._runs, *self._batches])
+
+    def snapshot(self) -> ZSet:
+        return self.value().consolidate()
+
+    @property
+    def df(self) -> DataFrame:
+        """``value()``'s frame, for plan inspection."""
+        return self.value().df
+
+
+def _sum(parts: list[ZSet]) -> ZSet:
+    acc = parts[0]
+    for z in parts[1:]:
+        acc = acc.add(z)
+    return acc
+
+
+def _compact(parts: list[ZSet]) -> ZSet:
+    """Consolidate a sum of Z-sets and cut its lineage. This is the only
+    place integrated state is compacted: under AQE ``localCheckpoint``
+    is an action even with ``eager=False`` (it runs every shuffle stage
+    of the plan at call time), so it must not run on every step."""
+    return ZSet(_sum(parts).consolidate().df.localCheckpoint(eager=False))
 
 
 # ---- stream-of-snapshots operators ------------------------------------
@@ -157,9 +247,11 @@ def differentiate(snapshots: list[DataFrame]) -> list[ZSet]:
 
 def integrate(deltas: list[ZSet]) -> list[ZSet]:
     """DBSPIntegralOperator: I(d)_t = Σ_{i<=t} d_i."""
+    if not deltas:
+        return []
+    acc = Integral(ZSet.empty(deltas[0].df))
     out: list[ZSet] = []
-    acc: ZSet | None = None
     for d in deltas:
-        acc = d if acc is None else acc.add(d)
-        out.append(acc.consolidate())
+        acc.add(d)
+        out.append(acc.snapshot())
     return out

@@ -17,7 +17,7 @@ from sql_to_dbsp_compiler_spark.plans.incremental import (
     IncrementalJoin,
     IncrementalLinearAgg,
 )
-from sql_to_dbsp_compiler_spark.plans.zset import WEIGHT, ZSet
+from sql_to_dbsp_compiler_spark.plans.zset import WEIGHT, ZSet, incremental_join
 
 
 def _zset(spark, schema, rows):
@@ -118,6 +118,12 @@ def test_incremental_linear_agg_all_null_sum_group(spark):
     assert _rows(acc) == {(1, None, 1)}
 
 
+def _join_count(df) -> int:
+    """Join nodes in a frame's optimized logical plan."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return sum(1 for line in plan.splitlines() if line.lstrip(" :+-").startswith("Join "))
+
+
 @pytest.mark.slow
 def test_incremental_join_every_step(spark):
     op = IncrementalJoin(
@@ -129,26 +135,33 @@ def test_incremental_join_every_step(spark):
     a_live: list[tuple] = []
     b_live: list[tuple] = []
     acc = None
-    for _ in range(5):
+    # which sides get rows each step: steps 2, 5 and 6 leave B unchanged
+    # and steps 3 and 7 leave A unchanged (their delta is ZSet.empty)
+    sides = ["ab", "ab", "a", "b", "ab", "a", "a", "b", "ab"]
+    for step_sides in sides:
         da, db = [], []
         for _ in range(rng.randint(1, 4)):
-            if a_live and rng.random() < 0.3:
-                row = a_live.pop(rng.randrange(len(a_live)))
-                da.append((*row, -1))
-            else:
-                row = (rng.randrange(3), rng.randint(0, 9))
-                a_live.append(row)
-                da.append((*row, 1))
-            if b_live and rng.random() < 0.3:
-                row = b_live.pop(rng.randrange(len(b_live)))
-                db.append((*row, -1))
-            else:
-                row = (rng.randrange(3), rng.randint(0, 9))
-                b_live.append(row)
-                db.append((*row, 1))
+            if "a" in step_sides:
+                if a_live and rng.random() < 0.3:
+                    row = a_live.pop(rng.randrange(len(a_live)))
+                    da.append((*row, -1))
+                else:
+                    row = (rng.randrange(3), rng.randint(0, 9))
+                    a_live.append(row)
+                    da.append((*row, 1))
+            if "b" in step_sides:
+                if b_live and rng.random() < 0.3:
+                    row = b_live.pop(rng.randrange(len(b_live)))
+                    db.append((*row, -1))
+                else:
+                    row = (rng.randrange(3), rng.randint(0, 9))
+                    b_live.append(row)
+                    db.append((*row, 1))
+        za = _zset(spark, "ak int, av int", da)
+        zb = _zset(spark, "bk int, bv int", db)
         acc = _integrate(
             acc,
-            op.step(_zset(spark, "ak int, av int", da), _zset(spark, "bk int, bv int", db)),
+            op.step(za if da else ZSet.empty(za.df), zb if db else ZSet.empty(zb.df)),
         )
         asnap = spark.createDataFrame(a_live, "ak int, av int")
         bsnap = spark.createDataFrame(b_live, "bk int, bv int")
@@ -156,6 +169,18 @@ def test_incremental_join_every_step(spark):
             F.col("ak").alias("k"), "av", "bv"
         )
         assert _rows(acc) == _rows(ZSet.from_df(expect))
+
+    # an empty ΔB leaves the one term ΔA⋈B, whether the emptiness is
+    # flagged (ZSet.empty, dropped in Python) or only static (limit(0),
+    # pruned by Catalyst)
+    a_prev = _zset(spark, "ak int, av int", [(1, 1, 1), (2, 2, 1)])
+    b_prev = _zset(spark, "bk int, bv int", [(1, 5, 1)])
+    da = _zset(spark, "ak int, av int", [(1, 3, 1)])
+    on = F.col("ak") == F.col("bk")
+    for db in (ZSet.empty(b_prev.df), ZSet(b_prev.df.limit(0))):
+        out = incremental_join(a_prev, da, b_prev, db, on)
+        assert _join_count(out.df) == 1
+        assert _rows(out) == {(1, 3, 1, 5, 1)}
 
 
 def test_incremental_distinct(spark):

@@ -3540,3 +3540,71 @@ def test_dedup_statement_sequence_native_replay(spark):
     con.execute("DELETE FROM docs WHERE doc_id IN (1, 100)")
     check("delete2")
     con.close()
+
+
+def test_step_with_unknown_table_changes_nothing(spark):
+    """A step that names an unknown table, or carries a delta with the
+    wrong columns, raises before it touches any state: the next valid
+    step sees the base plus its own delta only."""
+    inc = IncrementalProgram(spark, PROGRAM, optimize=False)
+    schema = "col0 int, col1 int, name string, __weight long"
+
+    def mk(rows):
+        return ZSet(spark.createDataFrame(rows, schema))
+
+    inc.step({"t": mk([(1, 10, "a", 1), (2, 20, "b", 1)])})
+    with pytest.raises(KeyError):
+        inc.step({"t": mk([(3, 30, "a", 1)]), "bogus": mk([(9, 9, "z", 1)])})
+    with pytest.raises(ValueError):
+        inc.step({"t": ZSet(spark.createDataFrame([(5, 1)], "col0 int, __weight long"))})
+    inc.step({"t": mk([(4, 40, "b", 1), (1, 10, "a", -1)])})
+    # live rows: (2, 20, b) and (4, 40, b)
+    assert _zrows(inc.snapshot("v1")) == {(2, 40, "b", 1), (4, 80, "b", 1)}
+    assert _zrows(inc.snapshot("v2")) == {("b", 120, 2, 1)}
+
+
+def test_jobs_per_step_do_not_grow(spark):
+    """A step's Spark work follows its delta: with fixed-size deltas the
+    Spark jobs run by ``step`` plus emitting its output do not grow with
+    the step index. The one step in this run that compacts state (the
+    ``checkpoint_every``-th add) may merge up to ``checkpoint_every``
+    batches per Integral; every other step runs the same jobs."""
+    import uuid
+
+    prog = """
+    CREATE TABLE f(fk INTEGER, q INTEGER);
+    CREATE TABLE d(dk INTEGER, grp VARCHAR);
+    CREATE VIEW g AS SELECT d.grp, SUM(f.q) AS sq, COUNT(*) AS n
+        FROM f JOIN d ON f.fk = d.dk GROUP BY d.grp;
+    """
+    every = 8
+    inc = IncrementalProgram(spark, prog, optimize=True, checkpoint_every=every)
+    assert inc.plan()["g"] == "join-aggregate"
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    tag = uuid.uuid4().hex
+
+    def jobs_of_step(i: int, deltas: dict) -> int:
+        group = f"jobs-per-step-{tag}-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            for z in inc.step(deltas).values():
+                z.df.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(tracker.getJobIdsForGroup(group))
+
+    def f_delta(i: int) -> ZSet:
+        rows = [(k % 20, i, 1) for k in range(5)]
+        return ZSet(spark.createDataFrame(rows, "fk int, q int, __weight long"))
+
+    jobs_of_step(0, {
+        "f": ZSet.from_df(spark.createDataFrame([(k % 20, k) for k in range(200)], "fk int, q int")),
+        "d": ZSet.from_df(spark.createDataFrame([(k, f"g{k % 3}") for k in range(20)], "dk int, grp string")),
+    })
+    jobs_of_step(1, {"f": f_delta(1)})  # warm-up: first read of the aggregate's state
+    jobs = sorted(jobs_of_step(i, {"f": f_delta(i)}) for i in range(2, 11))
+    # steps 2..10 hold one compaction (the 8th add, at step 7)
+    assert jobs[-2] - jobs[0] <= 1, jobs
+    assert jobs[-1] <= jobs[0] + 2 * every, jobs
