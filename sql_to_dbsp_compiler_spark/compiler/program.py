@@ -5335,13 +5335,16 @@ class IncrementalProgram:
     input deltas, so its Spark work follows |delta|. Views the
     recognizer leaves out (and recursive views) take the naive D∘Q∘I
     path, which re-evaluates the view over the full table snapshots.
-    Table, view and join state are each an :class:`Integral`, so a
-    step appends its deltas rather than re-consolidating the state,
-    and a table with no delta in a step feeds the views a
-    ``ZSet.empty`` that Catalyst and the operators prune.
-    ``checkpoint_every`` is the Integral compaction cadence: raw
-    deltas are merged every ``checkpoint_every`` steps, and folded
-    into the consolidated state every ``checkpoint_every``² steps.
+    Table and view state are each an :class:`Integral`, as is the
+    state of every operator but the linear aggregate, so a step
+    appends its deltas rather than re-consolidating the state, and a
+    table with no delta in a step feeds the views a ``ZSet.empty``
+    that Catalyst and the operators prune.
+    ``checkpoint_every`` is the compaction cadence of the table and
+    view Integrals only: their raw deltas are merged every
+    ``checkpoint_every`` steps, and folded into the consolidated state
+    every ``checkpoint_every``² steps. The operators are built without
+    it, so each compacts its own state at its default cadence of 8.
     """
 
     def __init__(
@@ -5775,8 +5778,6 @@ class IncrementalProgram:
                 dd = delta_of(op.src).df.withColumn("__g", F.lit(0))
                 op.op.step(ZSet(dd))
                 snap = op.op.snapshot().select(*op.out_cols)
-                # snap reads the aggregate's checkpointed state, so its
-                # lineage stays one step deep without a checkpoint here
                 cur = snap if snap.limit(1).count() > 0 else op.default_df
                 d = (
                     ZSet.from_df(cur)

@@ -20,17 +20,21 @@ DataFrames and exposes ``step(delta) -> delta``:
   dropped: a step that changes one side joins only that side's delta
   against the other side's state.
 
-Lineage: an ``Integral`` compacts (consolidates and checkpoints) its
-batches every ``checkpoint_every`` adds, the one compaction site for
-IncrementalJoin and IncrementalProgram state. The other operators
-still keep private state frames and truncate their lineage with their
-own ``localCheckpoint`` every ``checkpoint_every`` steps; under AQE
-that call is an action, not a lazy marker.
+Lineage: operator state is :class:`~.zset.Integral` objects, each of
+which compacts (consolidates and checkpoints) its batches every
+``checkpoint_every`` adds. Under AQE ``localCheckpoint`` is an action,
+not a lazy marker, and two more places run it: IncrementalLinearAgg
+checkpoints its merged state every step, and the touched-key
+recompute, distinct and set-op operators materialize each output
+delta once (``_materialize``). A step whose every input is
+``ZSet.empty`` runs no Spark job.
 """
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -38,18 +42,121 @@ from pyspark.sql import functions as F
 from .zset import WEIGHT, Integral, ZSet, incremental_join
 
 
-def _join_on_keys(df: DataFrame, keys: list[str], touched: DataFrame, how: str) -> DataFrame:
-    """Null-safe leftsemi/left_anti of ``df`` against the key rows in
-    ``touched``. SQL GROUP BY / PARTITION BY place NULL keys in one
-    group, but name-list joins use null-unsafe ``=`` — a NULL-keyed
-    state row would never be recomputed into new_rows nor retracted
-    from the stored output, silently diverging from the batch query."""
-    t = touched.select(*[F.col(k).alias(f"__t{i}") for i, k in enumerate(keys)])
+def _join_on_keys(df: DataFrame, keys: list[str], touched: DataFrame) -> DataFrame:
+    """Null-safe leftsemi of ``df`` against the key rows in ``touched``,
+    whose columns match ``keys`` by position. SQL GROUP BY / PARTITION
+    BY place NULL keys in one group, but name-list joins use
+    null-unsafe ``=`` — a NULL-keyed state row would never be
+    recomputed into new_rows nor retracted from the stored output,
+    silently diverging from the batch query."""
+    t = touched.toDF(*[f"__t{i}" for i in range(len(keys))])
     cond = None
     for i, k in enumerate(keys):
         eq = df[k].eqNullSafe(t[f"__t{i}"])
         cond = eq if cond is None else cond & eq
-    return df.join(t, cond, how)
+    return df.join(t, cond, "leftsemi")
+
+
+def _materialize(z: ZSet) -> ZSet:
+    """Run ``z``'s plan once and cut its lineage (under AQE
+    ``localCheckpoint`` is an action even with ``eager=False``). An
+    operator's output delta is read again downstream: by the caller,
+    by the view's integral when it compacts, and in UNION and set-op
+    chains by the next operator's integral. Left lazy, every such read
+    re-runs the step against the state as it was then."""
+    return ZSet(z.df.localCheckpoint(eager=False))
+
+
+def _eq_keys(left: DataFrame, lkeys: list[str], right: DataFrame, rkeys: list[str]) -> Column:
+    """SQL ``=`` on each key pair, ANDed: null-unsafe, so NULL keys never
+    match."""
+    return reduce(operator.and_, [left[lk] == right[rk] for lk, rk in zip(lkeys, rkeys)])
+
+
+def _weights_by_payload(payload: list[str], parts: dict[str, DataFrame]) -> DataFrame:
+    """One row per payload present in any of the Z-set frames ``parts``,
+    with each part's summed weight in a column named after it (0 where
+    the part lacks that payload). NULLs group together, as in SQL
+    DISTINCT and set operations."""
+    zero = F.lit(0).cast("long")
+    frames = [
+        df.select(*payload, *[(F.col(WEIGHT) if n == name else zero).alias(n) for n in parts])
+        for name, df in parts.items()
+    ]
+    return reduce(DataFrame.unionByName, frames).groupBy(*payload).agg(
+        *[F.sum(n).alias(n) for n in parts]
+    )
+
+
+class _TouchedKeyRecompute:
+    """The step shared by the operators that have no delta rule (outer
+    joins, range predicates, TopK, windows, non-linear aggregates):
+    touched-key recompute over one :class:`Integral` per input and one
+    for the emitted output.
+
+    A step adds the input deltas to their integrals, restricts each
+    integral to the keys present in some delta, consolidates that
+    restriction (O(touched), not O(|state|)), hands it to the
+    subclass's ``_eval`` and emits the difference against the stored
+    output of the same keys. ``in_keys[i]`` names input i's key
+    columns and ``out_keys`` the output's, matched by position.
+
+    ``_eval(*states)`` takes one consolidated frame (payload + weight)
+    per input and returns the output Z-set over them."""
+
+    def __init__(self, in_keys: list[list[str]], out_keys: list[str], checkpoint_every: int):
+        self._in_keys = in_keys
+        self._out_keys = out_keys
+        self._every = checkpoint_every
+        self._ins: list[Integral] = []
+        self._out: Integral | None = None
+        self._zero: ZSet | None = None
+
+    def _eval(self, *states: DataFrame) -> ZSet:
+        raise NotImplementedError
+
+    def step(self, *deltas: ZSet) -> ZSet:
+        if self._out is None:
+            zeros = [ZSet.empty(d.df) for d in deltas]
+            self._ins = [Integral(z, self._every) for z in zeros]
+            self._zero = ZSet.empty(self._eval(*(z.df for z in zeros)).df)
+            self._out = Integral(self._zero, self._every)
+        if all(d.is_empty for d in deltas):
+            return self._zero
+        # semi joins only: duplicate touched keys are harmless
+        touched = reduce(
+            DataFrame.unionByName,
+            [
+                d.df.select(*[F.col(k).alias(f"__t{i}") for i, k in enumerate(keys)])
+                for d, keys in zip(deltas, self._in_keys)
+            ],
+        )
+        for integ, d in zip(self._ins, deltas):
+            integ.add(d)
+        new = self._eval(
+            *[
+                ZSet(_join_on_keys(integ.value().df, keys, touched)).consolidate().df
+                for integ, keys in zip(self._ins, self._in_keys)
+            ]
+        )
+        # Diff against the stored output, never a re-evaluation of the
+        # old state: ROW_NUMBER ties (TopK, windows) can break another
+        # way on a re-evaluation, and the view's integral would then
+        # drift from what was emitted.
+        old = ZSet(_join_on_keys(self._out.value().df, self._out_keys, touched))
+        delta = new.subtract(old).consolidate()
+        # Materialize the delta once before storing it: it reads the
+        # output integral's own raw batches, so appended lazily, batch
+        # k's plan would contain batches 1..k-1 and double in size every
+        # step until compaction.
+        delta = _materialize(delta)
+        self._out.add(delta)
+        return delta
+
+    def snapshot(self) -> DataFrame:
+        if self._out is None:
+            raise ValueError("no steps applied")
+        return self._out.value().to_multiset_df()
 
 
 class IncrementalFilterMap:
@@ -292,36 +399,34 @@ class IncrementalSemiAnti:
         self.keys_a = list(keys_a)
         self.anti = anti
         self._dist = IncrementalDistinct(checkpoint_every=checkpoint_every)
-        self._a: ZSet | None = None  # integrated A (post outer filter)
-        self._d: ZSet | None = None  # integrated distinct key set
-        self._steps = 0
         self._checkpoint_every = checkpoint_every
+        self._a: Integral | None = None  # integrated A (post outer filter)
+        self._d: Integral | None = None  # integrated distinct key set
 
     def step(self, da: ZSet, dkeys: ZSet) -> ZSet:
+        if self._a is None:
+            self._a = Integral(ZSet.empty(da.df), self._checkpoint_every)
+            self._d = Integral(ZSet.empty(dkeys.df), self._checkpoint_every)
+        if da.is_empty and dkeys.is_empty:
+            return ZSet.empty(da.df)
         dd = self._dist.step(dkeys.consolidate())
-        d_new = dd if self._d is None else self._d.add(dd).consolidate()
         on = None
         for i, k in enumerate(self.keys_a):
             eq = F.col(k) == F.col(f"__k{i}")
             on = eq if on is None else (on & eq)
         payload = [c for c in da.df.columns if c != WEIGHT]
-        # Δ(A⋉D) = ΔA⋈D_old + A_old⋈ΔD + ΔA⋈ΔD = ΔA⋈D_new + A_old⋈ΔD
-        dsemi = da.join(d_new, on)
-        if self._a is not None:
-            dsemi = dsemi.add(self._a.join(dd, on))
+        # Δ(A⋉D) = ΔA⋈D_old + A_old⋈ΔD + ΔA⋈ΔD; both states are
+        # unconsolidated sums, which the join distributes over
+        dsemi = incremental_join(self._a.value(), da, self._d.value(), dd, on)
         dsemi = dsemi.map(*[F.col(c) for c in payload]).consolidate()
-        self._a = da.consolidate() if self._a is None else self._a.add(da).consolidate()
-        self._d = d_new
-        self._steps += 1
-        if self._steps % self._checkpoint_every == 0:
-            self._a = ZSet(self._a.df.localCheckpoint(eager=False))
-            self._d = ZSet(self._d.df.localCheckpoint(eager=False))
+        self._a.add(da)
+        self._d.add(dd)
         if self.anti:
             return da.subtract(dsemi).consolidate()
         return dsemi
 
 
-class IncrementalRangeSemiAnti:
+class IncrementalRangeSemiAnti(_TouchedKeyRecompute):
     """Decorrelated [NOT] EXISTS whose correlation carries a NON-EQUI
     residual — ``EXISTS (SELECT 1 FROM B WHERE B.k = A.k AND
     B.ts < A.ts [AND resid])`` (reference:
@@ -358,73 +463,17 @@ class IncrementalRangeSemiAnti:
         self.keys_a = list(keys_a)
         self.pred = pred
         self.anti = anti
-        self._a: ZSet | None = None
-        self._b: ZSet | None = None  # (__k.., __b_..) pairs, weighted
-        self._out: DataFrame | None = None
-        self._steps = 0
-        self._checkpoint_every = checkpoint_every
+        b_keys = [f"__k{i}" for i in range(len(self.keys_a))]
+        super().__init__([self.keys_a, b_keys], self.keys_a, checkpoint_every)
 
-    def step(self, da: ZSet, db: ZSet) -> ZSet:
-        da = da.consolidate()
-        db = db.consolidate()
-        n = len(self.keys_a)
-        touched = (
-            da.df.select(*[F.col(k) for k in self.keys_a])
-            .unionByName(
-                db.df.select(
-                    *[F.col(f"__k{i}").alias(k) for i, k in enumerate(self.keys_a)]
-                )
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        self._a = da if self._a is None else self._a.add(da).consolidate()
-        self._b = db if self._b is None else self._b.add(db).consolidate()
-
-        a_t = _join_on_keys(self._a.df, self.keys_a, touched, "leftsemi")
-        b_t = _join_on_keys(
-            self._b.df,
-            [f"__k{i}" for i in range(n)],
-            touched.select(
-                *[F.col(k).alias(f"__k{i}") for i, k in enumerate(self.keys_a)]
-            ),
-            "leftsemi",
-        )
+    def _eval(self, a: DataFrame, b: DataFrame) -> ZSet:
         # existence is over the SUPPORT of integrated B
-        b_payload = [c for c in b_t.columns if c != WEIGHT]
-        b_pos = (
-            b_t.groupBy(*b_payload)
-            .agg(F.sum(WEIGHT).alias(WEIGHT))
-            .where(F.col(WEIGHT) > 0)
-            .drop(WEIGHT)
-        )
-        cond = None
-        for i, k in enumerate(self.keys_a):
-            eq = a_t[k] == b_pos[f"__k{i}"]
-            cond = eq if cond is None else cond & eq
-        cond = cond & F.expr(self.pred)
-        how = "left_anti" if self.anti else "leftsemi"
-        new_t = a_t.join(b_pos, cond, how).localCheckpoint(eager=False)
-
-        if self._out is None:
-            out_delta = ZSet(new_t)
-            self._out = new_t
-        else:
-            old_t = _join_on_keys(self._out, self.keys_a, touched, "leftsemi")
-            out_delta = ZSet(new_t).subtract(ZSet(old_t)).consolidate()
-            self._out = _join_on_keys(
-                self._out, self.keys_a, touched, "left_anti"
-            ).unionByName(new_t)
-
-        self._steps += 1
-        if self._steps % self._checkpoint_every == 0:
-            self._a = ZSet(self._a.df.localCheckpoint(eager=False))
-            self._b = ZSet(self._b.df.localCheckpoint(eager=False))
-            self._out = self._out.localCheckpoint(eager=False)
-        return out_delta
+        b_pos = b.where(F.col(WEIGHT) > 0).drop(WEIGHT)
+        cond = _eq_keys(a, self.keys_a, b_pos, self._in_keys[1]) & F.expr(self.pred)
+        return ZSet(a.join(b_pos, cond, "left_anti" if self.anti else "leftsemi"))
 
 
-class IncrementalRangeScalarAgg:
+class IncrementalRangeScalarAgg(_TouchedKeyRecompute):
     """Range-correlated SCALAR AGGREGATE subquery — ``SELECT a.*,
     (SELECT agg(b.v) FROM b WHERE b.k = a.k AND b.ts < a.ts) FROM a``
     (the "latest-before"/as-of aggregation shape; reference
@@ -456,11 +505,8 @@ class IncrementalRangeScalarAgg:
         self.fn = fn.lower()
         self.alias = alias
         self.star = star  # COUNT(*) — no __arg column projected
-        self._a: ZSet | None = None
-        self._b: ZSet | None = None
-        self._out: DataFrame | None = None
-        self._steps = 0
-        self._checkpoint_every = checkpoint_every
+        b_keys = [f"__k{i}" for i in range(len(self.keys_a))]
+        super().__init__([self.keys_a, b_keys], self.keys_a, checkpoint_every)
 
     def _agg_col(self) -> Column:
         w = F.col("__bw")
@@ -479,72 +525,18 @@ class IncrementalRangeScalarAgg:
             return F.min("__arg")
         return F.max("__arg")
 
-    def step(self, da: ZSet, db: ZSet) -> ZSet:
-        da = da.consolidate()
-        db = db.consolidate()
-        n = len(self.keys_a)
-        touched = (
-            da.df.select(*[F.col(k) for k in self.keys_a])
-            .unionByName(
-                db.df.select(
-                    *[F.col(f"__k{i}").alias(k) for i, k in enumerate(self.keys_a)]
-                )
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        self._a = da if self._a is None else self._a.add(da).consolidate()
-        self._b = db if self._b is None else self._b.add(db).consolidate()
-
-        a_t = _join_on_keys(self._a.df, self.keys_a, touched, "leftsemi")
-        b_t = _join_on_keys(
-            self._b.df,
-            [f"__k{i}" for i in range(n)],
-            touched.select(
-                *[F.col(k).alias(f"__k{i}") for i, k in enumerate(self.keys_a)]
-            ),
-            "leftsemi",
-        )
-        b_payload = [c for c in b_t.columns if c != WEIGHT]
-        b_c = (
-            b_t.groupBy(*b_payload)
-            .agg(F.sum(WEIGHT).alias("__bw"))
-            .where(
-                F.col("__bw") > 0
-                if self.fn in ("min", "max")
-                else F.col("__bw") != 0
-            )
-        )
-        cond = None
-        for i, k in enumerate(self.keys_a):
-            eq = a_t[k] == b_c[f"__k{i}"]
-            cond = eq if cond is None else cond & eq
-        cond = cond & F.expr(self.pred)
-        a_cols = [c for c in a_t.columns if c != WEIGHT]
-        new_t = (
-            a_t.join(b_c, cond, "left")
-            .groupBy(*[a_t[c] for c in a_cols], a_t[WEIGHT])
+    def _eval(self, a: DataFrame, b: DataFrame) -> ZSet:
+        b_c = b.withColumnRenamed(WEIGHT, "__bw")
+        if self.fn in ("min", "max"):
+            b_c = b_c.where(F.col("__bw") > 0)  # the positive support
+        cond = _eq_keys(a, self.keys_a, b_c, self._in_keys[1]) & F.expr(self.pred)
+        a_cols = [c for c in a.columns if c != WEIGHT]
+        return ZSet(
+            a.join(b_c, cond, "left")
+            .groupBy(*[a[c] for c in a_cols], a[WEIGHT])
             .agg(self._agg_col().alias(self.alias))
             .select(*a_cols, self.alias, WEIGHT)
-            .localCheckpoint(eager=False)
         )
-
-        if self._out is None:
-            out_delta = ZSet(new_t)
-            self._out = new_t
-        else:
-            old_t = _join_on_keys(self._out, self.keys_a, touched, "leftsemi")
-            out_delta = ZSet(new_t).subtract(ZSet(old_t)).consolidate()
-            self._out = _join_on_keys(
-                self._out, self.keys_a, touched, "left_anti"
-            ).unionByName(new_t)
-
-        self._steps += 1
-        if self._steps % self._checkpoint_every == 0:
-            self._a = ZSet(self._a.df.localCheckpoint(eager=False))
-            self._b = ZSet(self._b.df.localCheckpoint(eager=False))
-            self._out = self._out.localCheckpoint(eager=False)
-        return out_delta
 
 
 class IncrementalNullAwareNotIn:
@@ -562,102 +554,66 @@ class IncrementalNullAwareNotIn:
     NOT IN through the same guarded-subquery expansion — a count
     aggregate joined as a scalar gating an anti join). Both products
     are bilinear, so the delta rule ``Δ(U·V) = ΔU·V_new + U_old·ΔV``
-    applies with scalars as weight-carrying unit Z-sets; scalar
-    multiplication is a crossJoin against a 1-row frame whose
-    weight-0 case prunes to an empty side. Mode flips (E or N
-    changing) legitimately retract/insert the whole affected side —
-    that IS the delta of the view. Per-step cost is ∝ |delta| while
-    modes are stable; the scalar recount is a 1-row global aggregate
-    over the B key state."""
+    applies. E and N depend only on B's total weight and NULL-key
+    weight, which are linear in B: the operator keeps both as driver
+    integers, adding one collected 1-row sum per B delta, so each
+    scalar product is decided in Python and a zero term never reaches
+    Spark. Mode flips (E or N changing) legitimately retract/insert
+    the whole affected side — that IS the delta of the view.
+    Per-step cost is ∝ |delta| while modes are stable."""
 
     def __init__(self, key_a: str, checkpoint_every: int = 8):
         self.key_a = key_a
         self._anti = IncrementalSemiAnti(keys_a=[key_a], anti=True,
                                          checkpoint_every=checkpoint_every)
-        self._a: ZSet | None = None  # integrated full A (incl. NULL x)
-        self._b: ZSet | None = None  # integrated B key col (__k0, incl. NULLs)
-        self._anti_int: ZSet | None = None  # integral of the anti output
-        self._steps = 0
         self._checkpoint_every = checkpoint_every
+        self._a: Integral | None = None  # integrated full A (incl. NULL x)
+        self._anti_int: Integral | None = None  # integral of the anti output
+        self._tot = 0  # Σw of integrated B
+        self._nulls = 0  # Σw of its NULL y rows
 
-    @staticmethod
-    def _scalars(bdf: DataFrame) -> DataFrame:
-        """1-row frame: __e / __n indicator weights from B's state."""
-        zero = F.lit(0).cast("long")
-        s = bdf.agg(
-            F.coalesce(F.sum(WEIGHT), zero).alias("__tot"),
-            F.coalesce(
-                F.sum(F.when(F.col("__k0").isNull(), F.col(WEIGHT)).otherwise(zero)),
-                zero,
-            ).alias("__nulls"),
-        )
-        return s.select(
-            F.when(F.col("__tot") == 0, F.lit(1)).otherwise(F.lit(0)).cast("long").alias("__e"),
-            F.when((F.col("__tot") > 0) & (F.col("__nulls") == 0), F.lit(1))
-            .otherwise(F.lit(0)).cast("long").alias("__n"),
-        )
-
-    @staticmethod
-    def _smul(scalar: DataFrame, ind: str, z: "ZSet | None") -> "ZSet | None":
-        """Scalar·Z-set product: crossJoin with the 1-row indicator,
-        multiplying weights; weight-0 indicators prune to empty."""
-        if z is None:
-            return None
-        payload = [c for c in z.df.columns if c != WEIGHT]
-        s = scalar.select(F.col(ind).alias("__sw")).where(F.col("__sw") != 0)
-        return ZSet(
-            z.df.crossJoin(s).select(
-                *payload, (F.col(WEIGHT) * F.col("__sw")).cast("long").alias(WEIGHT)
-            )
-        )
+    def _modes(self) -> tuple[int, int]:
+        """The indicators (E, N) of the integrated B."""
+        return int(self._tot == 0), int(self._tot > 0 and self._nulls == 0)
 
     def step(self, da: ZSet, db: ZSet) -> ZSet:
         """``da``: full A-side delta (outer WHERE applied); ``db``:
         B-side delta of the compared column, named ``__k0``."""
-        da = da.consolidate()
-        db = db.consolidate()
-        b_old_df = self._b.df if self._b is not None else db.df.where(F.lit(False))
-        sc_old = self._scalars(b_old_df).localCheckpoint(eager=False)
-        a_old, anti_old = self._a, self._anti_int
+        if self._a is None:
+            self._a = Integral(ZSet.empty(da.df), self._checkpoint_every)
+            self._anti_int = Integral(ZSet.empty(da.df), self._checkpoint_every)
+        if da.is_empty and db.is_empty:
+            return ZSet.empty(da.df)
+        e_old, n_old = self._modes()
+        if not db.is_empty:
+            w = F.col(WEIGHT)
+            tot, nulls = db.df.agg(
+                F.coalesce(F.sum(w), F.lit(0)),
+                F.coalesce(F.sum(F.when(F.col("__k0").isNull(), w)), F.lit(0)),
+            ).first()
+            self._tot += tot
+            self._nulls += nulls
+        e_new, n_new = self._modes()
 
-        da_nonnull = da.filter(F.col(self.key_a).isNotNull())
-        dk_nonnull = db.filter(F.col("__k0").isNotNull())
-        danti = self._anti.step(da_nonnull, dk_nonnull)
-
-        self._a = da if self._a is None else self._a.add(da).consolidate()
-        self._b = db if self._b is None else self._b.add(db).consolidate()
-        self._anti_int = (
-            danti if self._anti_int is None else self._anti_int.add(danti).consolidate()
+        danti = self._anti.step(
+            da.filter(F.col(self.key_a).isNotNull()), db.filter(F.col("__k0").isNotNull())
         )
-        sc_new = self._scalars(self._b.df).localCheckpoint(eager=False)
-        # Δindicator as a 1-row frame (new - old weight)
-        d_sc = (
-            sc_new.select("__e", "__n")
-            .unionByName(sc_old.select((-F.col("__e")).alias("__e"), (-F.col("__n")).alias("__n")))
-            .agg(F.sum("__e").alias("__e"), F.sum("__n").alias("__n"))
-            .localCheckpoint(eager=False)
-        )
-
+        self._a.add(da)
+        self._anti_int.add(danti)
         terms = [
-            self._smul(d_sc, "__e", self._a),        # ΔE · A_new
-            self._smul(sc_old, "__e", da),           # E_old · ΔA
-            self._smul(d_sc, "__n", self._anti_int), # ΔN · ANTI_new
-            self._smul(sc_old, "__n", danti),        # N_old · Δanti
+            (e_new - e_old, self._a.value()),  # ΔE · A_new
+            (e_old, da),  # E_old · ΔA
+            (n_new - n_old, self._anti_int.value()),  # ΔN · ANTI_new
+            (n_old, danti),  # N_old · Δanti
         ]
-        out = None
-        for t in terms:
-            if t is None:
-                continue
-            out = t if out is None else out.add(t)
-        self._steps += 1
-        if self._steps % self._checkpoint_every == 0:
-            self._a = ZSet(self._a.df.localCheckpoint(eager=False))
-            self._b = ZSet(self._b.df.localCheckpoint(eager=False))
-            self._anti_int = ZSet(self._anti_int.df.localCheckpoint(eager=False))
+        out = ZSet.empty(da.df)
+        for s, z in terms:
+            if s:
+                out = out.add(z if s > 0 else z.neg())
         return out.consolidate()
 
 
-class IncrementalKeyedNotIn:
+class IncrementalKeyedNotIn(_TouchedKeyRecompute):
     """CORRELATED NULL-aware ``x NOT IN (SELECT y FROM B WHERE B.k =
     A.k [AND resid])``: the empty/has-NULL mode indicators are per
     correlation key, so the global scalar product of
@@ -677,13 +633,10 @@ class IncrementalKeyedNotIn:
     def __init__(self, val_a: str, corr_a: list[str], checkpoint_every: int = 8):
         self.val_a = val_a
         self.corr_a = list(corr_a)
-        self._a: ZSet | None = None  # integrated A (payload + weight)
-        self._b: ZSet | None = None  # integrated (__k0.., __v) pairs
-        self._out: DataFrame | None = None  # stored output (payload + weight)
-        self._steps = 0
-        self._checkpoint_every = checkpoint_every
+        b_keys = [f"__k{i}" for i in range(len(self.corr_a))]
+        super().__init__([self.corr_a, b_keys], self.corr_a, checkpoint_every)
 
-    def _eval(self, a_t: DataFrame, b_t: DataFrame) -> DataFrame:
+    def _eval(self, a_t: DataFrame, b_t: DataFrame) -> ZSet:
         """Predicate over the touched restriction: A rows (weighted)
         that pass NOT IN vs the B pairs, all joins plain-equality."""
         zero = F.lit(0).cast("long")
@@ -695,11 +648,8 @@ class IncrementalKeyedNotIn:
         bagg = bagg.select(
             *[F.col(f"__k{i}").alias(f"__bk{i}") for i in range(n)], "__tot", "__nulls"
         )
-        cond = None
-        for i, k in enumerate(self.corr_a):
-            eq = a_t[k] == F.col(f"__bk{i}")  # null-unsafe: SQL `=`
-            cond = eq if cond is None else cond & eq
-        j = a_t.join(bagg, cond, "left")
+        bkeys = [f"__bk{i}" for i in range(n)]
+        j = a_t.join(bagg, _eq_keys(a_t, self.corr_a, bagg, bkeys), "left")
 
         pairs = (
             b_t.where(F.col("__v").isNotNull())
@@ -712,9 +662,8 @@ class IncrementalKeyedNotIn:
                 F.lit(1).alias("__hit"),
             )
         )
-        pcond = a_t[self.val_a] == pairs["__pv"]
-        for i, k in enumerate(self.corr_a):
-            pcond = pcond & (a_t[k] == pairs[f"__pk{i}"])
+        pkeys = [f"__pk{i}" for i in range(n)]
+        pcond = (a_t[self.val_a] == pairs["__pv"]) & _eq_keys(a_t, self.corr_a, pairs, pkeys)
         j = j.join(pairs, pcond, "left")
 
         payload = [c for c in a_t.columns if c != WEIGHT]
@@ -723,109 +672,39 @@ class IncrementalKeyedNotIn:
         passes = (tot == 0) | (
             (nulls == 0) & F.col(self.val_a).isNotNull() & F.col("__hit").isNull()
         )
-        return j.where(passes).select(*payload, WEIGHT)
-
-    def _touched_rows(self, z: "ZSet | None", touched: DataFrame) -> DataFrame:
-        return _join_on_keys(z.df, self.corr_a, touched, "leftsemi")
-
-    def step(self, da: ZSet, db: ZSet) -> ZSet:
-        da = da.consolidate()
-        db = db.consolidate()
-        n = len(self.corr_a)
-        touched = (
-            da.df.select(*[F.col(k) for k in self.corr_a])
-            .unionByName(
-                db.df.select(
-                    *[F.col(f"__k{i}").alias(k) for i, k in enumerate(self.corr_a)]
-                )
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        self._a = da if self._a is None else self._a.add(da).consolidate()
-        self._b = db if self._b is None else self._b.add(db).consolidate()
-
-        a_t = self._touched_rows(self._a, touched)
-        b_t = _join_on_keys(
-            self._b.df,
-            [f"__k{i}" for i in range(n)],
-            touched.select(
-                *[F.col(k).alias(f"__k{i}") for i, k in enumerate(self.corr_a)]
-            ),
-            "leftsemi",
-        )
-        new_t = self._eval(a_t, b_t).localCheckpoint(eager=False)
-
-        if self._out is None:
-            out_delta = ZSet(new_t)
-            self._out = new_t
-        else:
-            old_t = _join_on_keys(self._out, self.corr_a, touched, "leftsemi")
-            out_delta = ZSet(new_t).subtract(ZSet(old_t)).consolidate()
-            self._out = _join_on_keys(
-                self._out, self.corr_a, touched, "left_anti"
-            ).unionByName(new_t)
-
-        self._steps += 1
-        if self._steps % self._checkpoint_every == 0:
-            self._a = ZSet(self._a.df.localCheckpoint(eager=False))
-            self._b = ZSet(self._b.df.localCheckpoint(eager=False))
-            self._out = self._out.localCheckpoint(eager=False)
-        return out_delta
+        return ZSet(j.where(passes).select(*payload, WEIGHT))
 
 
 class IncrementalDistinct:
     """DBSPIncrementalDistinctOperator: maintain per-row multiplicity;
     emit +1 when a row's weight crosses 0→positive, -1 on positive→0.
 
-    State is one row per distinct payload with its integrated weight;
-    a step touches only payloads present in the delta (equi-join on
-    the payload columns — bucketed state at scale)."""
+    State is the :class:`Integral` of the input deltas: a payload's
+    multiplicity is its integrated weight. A step reads only the
+    payloads present in the delta (null-safe semi join on the payload
+    columns — bucketed state at scale)."""
 
     def __init__(self, checkpoint_every: int = 8):
-        self._state: DataFrame | None = None  # payload + __mult
-        self._steps = 0
         self._checkpoint_every = checkpoint_every
+        self._mult: Integral | None = None
 
     def step(self, delta: ZSet) -> ZSet:
-        d = delta.consolidate().df.withColumnRenamed(WEIGHT, "__d")
-        payload = [c for c in d.columns if c != "__d"]
-        if self._state is None:
-            merged = d.select(*payload, F.lit(0).cast("long").alias("__old"), F.col("__d"))
-        else:
-            st = self._state.select(
-                *[F.col(c).alias(f"s_{c}") for c in payload], F.col("__mult").alias("__old")
-            )
-            cond = None
-            for c in payload:
-                eq = d[c].eqNullSafe(F.col(f"s_{c}"))
-                cond = eq if cond is None else (cond & eq)
-            j = d.join(st, cond, "full_outer")
-            merged = j.select(
-                *[F.coalesce(d[c], F.col(f"s_{c}")).alias(c) for c in payload],
-                F.coalesce(F.col("__old"), F.lit(0)).alias("__old"),
-                F.coalesce(F.col("__d"), F.lit(0)).alias("__d"),
-            )
-        merged = merged.withColumn("__new", F.col("__old") + F.col("__d")).localCheckpoint(
-            eager=False
+        if self._mult is None:
+            self._mult = Integral(ZSet.empty(delta.df), self._checkpoint_every)
+        if delta.is_empty:
+            return delta
+        payload = [c for c in delta.df.columns if c != WEIGHT]
+        old = _join_on_keys(self._mult.value().df, payload, delta.df.select(*payload))
+        m = _weights_by_payload(payload, {"__old": old, "__d": delta.df})
+        new = F.col("__old") + F.col("__d")
+        out = m.where(
+            ((F.col("__old") > 0) & (new <= 0)) | ((F.col("__old") <= 0) & (new > 0))
+        ).select(
+            *payload,
+            F.when(new > 0, F.lit(1)).otherwise(F.lit(-1)).cast("long").alias(WEIGHT),
         )
-        out = (
-            merged.where(
-                ((F.col("__old") > 0) & (F.col("__new") <= 0))
-                | ((F.col("__old") <= 0) & (F.col("__new") > 0))
-            )
-            .select(
-                *payload,
-                F.when(F.col("__new") > 0, F.lit(1)).otherwise(F.lit(-1)).cast("long").alias(WEIGHT),
-            )
-        )
-        self._state = merged.where(F.col("__new") != 0).select(
-            *payload, F.col("__new").alias("__mult")
-        )
-        self._steps += 1
-        if self._steps % self._checkpoint_every == 0:
-            self._state = self._state.localCheckpoint(eager=False)
-        return ZSet(out)
+        self._mult.add(delta)
+        return _materialize(ZSet(out))
 
 
 class IncrementalSetOp:
@@ -835,18 +714,18 @@ class IncrementalSetOp:
     subtract∘distinct and INTERSECT to a self-join of distincts; here
     both collapse into one multiplicity-state operator).
 
-    State: one row per distinct payload with integrated input
-    multiplicities (``__ma``, ``__mb``). The output multiplicity is a
-    pure function of (ma, mb):
+    State: the :class:`Integral` of each input's deltas, whose weights
+    are the integrated multiplicities ma and mb. The output
+    multiplicity is a pure function of (ma, mb):
 
     - ``except``:        1 if ma>0 and mb<=0 else 0
     - ``except_all``:    max(0, ma - mb)
     - ``intersect``:     1 if ma>0 and mb>0 else 0
     - ``intersect_all``: max(0, min(ma, mb))
 
-    A step touches only payloads present in either delta (equi-join on
-    payload columns — bucketed state at scale) and emits the change in
-    output multiplicity as the output delta."""
+    A step reads only payloads present in either delta (null-safe semi
+    join on the payload columns — bucketed state at scale) and emits
+    the change in output multiplicity as the output delta."""
 
     KINDS = ("except", "except_all", "intersect", "intersect_all")
 
@@ -854,9 +733,9 @@ class IncrementalSetOp:
         if kind not in self.KINDS:
             raise ValueError(f"kind must be one of {self.KINDS}")
         self.kind = kind
-        self._state: DataFrame | None = None  # payload + __ma + __mb
-        self._steps = 0
         self._checkpoint_every = checkpoint_every
+        self._ma: Integral | None = None
+        self._mb: Integral | None = None
 
     def _out_mult(self, ma: Column, mb: Column) -> Column:
         if self.kind == "except":
@@ -868,69 +747,38 @@ class IncrementalSetOp:
         return F.greatest(F.least(ma, mb), F.lit(0))  # intersect_all
 
     def step(self, da: ZSet, db: ZSet) -> ZSet:
-        zero = F.lit(0).cast("long")
-        a = da.consolidate().df.withColumnRenamed(WEIGHT, "__da")
-        payload = [c for c in a.columns if c != "__da"]
+        payload = [c for c in da.df.columns if c != WEIGHT]
         b_payload = [c for c in db.df.columns if c != WEIGHT]
-        b = (
-            db.consolidate()
-            .df.select(*b_payload, WEIGHT)
-            .toDF(*payload, "__db")  # positional set-op column matching
-        )
-        d = (
-            a.select(*payload, F.col("__da"), zero.alias("__db"))
-            .unionByName(b.select(*payload, zero.alias("__da"), F.col("__db")))
-            .groupBy(*payload)
-            .agg(F.sum("__da").alias("__da"), F.sum("__db").alias("__db"))
-        )
-        if self._state is None:
-            merged = d.select(
-                *payload,
-                zero.alias("__oa"),
-                zero.alias("__ob"),
-                F.col("__da"),
-                F.col("__db"),
-            )
-        else:
-            st = self._state.select(
-                *[F.col(c).alias(f"s_{c}") for c in payload],
-                F.col("__ma").alias("__oa"),
-                F.col("__mb").alias("__ob"),
-            )
-            cond = None
-            for c in payload:
-                eq = d[c].eqNullSafe(F.col(f"s_{c}"))
-                cond = eq if cond is None else (cond & eq)
-            j = d.join(st, cond, "full_outer")
-            merged = j.select(
-                *[F.coalesce(d[c], F.col(f"s_{c}")).alias(c) for c in payload],
-                F.coalesce(F.col("__oa"), zero).alias("__oa"),
-                F.coalesce(F.col("__ob"), zero).alias("__ob"),
-                F.coalesce(F.col("__da"), zero).alias("__da"),
-                F.coalesce(F.col("__db"), zero).alias("__db"),
-            )
-        merged = (
-            merged.withColumn("__na", F.col("__oa") + F.col("__da"))
-            .withColumn("__nb", F.col("__ob") + F.col("__db"))
-            .localCheckpoint(eager=False)
+        # positional set-op column matching
+        db = ZSet(db.df.select(*b_payload, WEIGHT).toDF(*payload, WEIGHT), db.is_empty)
+        if self._ma is None:
+            self._ma = Integral(ZSet.empty(da.df), self._checkpoint_every)
+            self._mb = Integral(ZSet.empty(db.df), self._checkpoint_every)
+        if da.is_empty and db.is_empty:
+            return ZSet.empty(da.df)
+        touched = da.df.select(*payload).unionByName(db.df.select(*payload))
+        m = _weights_by_payload(
+            payload,
+            {
+                "__oa": _join_on_keys(self._ma.value().df, payload, touched),
+                "__ob": _join_on_keys(self._mb.value().df, payload, touched),
+                "__da": da.df,
+                "__db": db.df,
+            },
         )
         old_out = self._out_mult(F.col("__oa"), F.col("__ob"))
-        new_out = self._out_mult(F.col("__na"), F.col("__nb"))
+        new_out = self._out_mult(F.col("__oa") + F.col("__da"), F.col("__ob") + F.col("__db"))
         out = (
-            merged.withColumn(WEIGHT, (new_out - old_out).cast("long"))
+            m.withColumn(WEIGHT, (new_out - old_out).cast("long"))
             .where(F.col(WEIGHT) != 0)
             .select(*payload, WEIGHT)
         )
-        self._state = merged.where((F.col("__na") != 0) | (F.col("__nb") != 0)).select(
-            *payload, F.col("__na").alias("__ma"), F.col("__nb").alias("__mb")
-        )
-        self._steps += 1
-        if self._steps % self._checkpoint_every == 0:
-            self._state = self._state.localCheckpoint(eager=False)
-        return ZSet(out)
+        self._ma.add(da)
+        self._mb.add(db)
+        return _materialize(ZSet(out))
 
 
-class IncrementalGroupRecomputeAgg:
+class IncrementalGroupRecomputeAgg(_TouchedKeyRecompute):
     """Non-linear grouped aggregates (MIN/MAX/arbitrary) maintained by
     *affected-group recompute* — the reference's strategy for
     aggregates without a subtraction rule (DBSPAggregateOperator over
@@ -953,45 +801,13 @@ class IncrementalGroupRecomputeAgg:
         self.keys = keys
         self.aggs = aggs
         self.cond = cond
-        self._input: ZSet | None = None  # integrated input state
-        self._out: DataFrame | None = None  # previous aggregate rows
-        self._steps = 0
-        self._checkpoint_every = checkpoint_every
+        super().__init__([keys], keys, checkpoint_every)
 
-    def _agg_over(self, multiset: DataFrame) -> DataFrame:
-        return multiset.groupBy(*self.keys).agg(*self.aggs)
+    def _eval(self, state: DataFrame) -> ZSet:
+        return ZSet.from_df(ZSet(state).to_multiset_df().groupBy(*self.keys).agg(*self.aggs))
 
     def step(self, delta: ZSet) -> ZSet:
-        z = delta if self.cond is None else delta.filter(self.cond)
-        self._input = z if self._input is None else self._input.add(z).consolidate()
-
-        touched = z.df.select(*self.keys).distinct()
-        # bucket-pruned state read: only touched groups leave the join
-        state_touched = _join_on_keys(self._input.df, self.keys, touched, "leftsemi")
-        new_rows = self._agg_over(
-            ZSet(state_touched).to_multiset_df()
-        ).localCheckpoint(eager=False)
-
-        if self._out is None:
-            out_delta = ZSet.from_df(new_rows)
-            self._out = new_rows
-        else:
-            old_rows = _join_on_keys(self._out, self.keys, touched, "leftsemi")
-            out_delta = ZSet.from_df(new_rows).subtract(ZSet.from_df(old_rows)).consolidate()
-            self._out = _join_on_keys(self._out, self.keys, touched, "left_anti").unionByName(
-                new_rows
-            )
-
-        self._steps += 1
-        if self._steps % self._checkpoint_every == 0:
-            self._input = ZSet(self._input.df.localCheckpoint(eager=False))
-            self._out = self._out.localCheckpoint(eager=False)
-        return out_delta
-
-    def snapshot(self) -> DataFrame:
-        if self._out is None:
-            raise ValueError("no steps applied")
-        return self._out
+        return super().step(delta if self.cond is None else delta.filter(self.cond))
 
 
 class IncrementalMixedAgg:
@@ -1047,7 +863,7 @@ class IncrementalMixedAgg:
         joins only process affected keys (bucket-pruned at scale)."""
         out = self.plain.snapshot()
         if touched is not None:
-            out = _join_on_keys(out, self.keys, touched, "leftsemi")
+            out = _join_on_keys(out, self.keys, touched)
         cols = [c for c in out.columns]
         for i, (_arg, alias, _dist, cnt) in enumerate(self.branches):
             snap = cnt.snapshot().select(
@@ -1070,7 +886,7 @@ class IncrementalMixedAgg:
     def step(self, delta: ZSet) -> ZSet:
         z = delta if self.cond is None else delta.filter(self.cond)
         z = z.consolidate()
-        touched = z.df.select(*self.keys).distinct().localCheckpoint(eager=False)
+        touched = z.df.select(*self.keys).distinct()
         # DataFrames are immutable plans: the pre-step combined view
         # stays valid (lazily) after the branch states advance.
         old_rows = self._combined(touched) if self._stepped else None
@@ -1090,7 +906,7 @@ class IncrementalMixedAgg:
         return self._combined()
 
 
-class IncrementalOuterJoin:
+class IncrementalOuterJoin(_TouchedKeyRecompute):
     """LEFT/RIGHT/FULL OUTER equi-join maintained by *touched-key
     recompute* (reference: outer joins lower to join + antijoin-derived
     null-padding circuits, DBSPStreamJoinOperator plus the
@@ -1101,7 +917,10 @@ class IncrementalOuterJoin:
     apply. Instead: keep both integrated inputs; on a step, the
     touched keys are the join-key values present in either delta;
     recompute the outer join restricted to touched keys and diff
-    against the stored output rows for those keys.
+    against the stored output rows for those keys. The touched-key
+    restriction is null-safe: NULL join keys never *match* (plain
+    equality in the join) but a NULL-keyed left insert still changes
+    the null-extended output, so it must reach the recompute.
 
     Per-step cost ∝ |delta| + Σ size(touched key groups). At scale both
     input states and the output are bucketed on the join key, so every
@@ -1128,42 +947,13 @@ class IncrementalOuterJoin:
             raise ValueError("key lists must be same non-zero length")
         self.project = project
         self.how = how
-        self._a: ZSet | None = None
-        self._b: ZSet | None = None
-        self._out: DataFrame | None = None  # projected rows + __jk{i}
-        self._steps = 0
-        self._checkpoint_every = checkpoint_every
         self._jks = [f"__jk{i}" for i in range(len(self.keys_a))]
+        super().__init__([self.keys_a, self.keys_b], self._jks, checkpoint_every)
 
-    def _semi(self, df: DataFrame, keys: list[str], touched: DataFrame) -> DataFrame:
-        cond = None
-        for k, t in zip(keys, touched.columns):
-            eq = df[k].eqNullSafe(touched[t])
-            cond = eq if cond is None else (cond & eq)
-        return df.join(touched, cond, "leftsemi")
-
-    def step(self, da: ZSet, db: ZSet) -> ZSet:
-        self._a = da.consolidate() if self._a is None else self._a.add(da).consolidate()
-        self._b = db.consolidate() if self._b is None else self._b.add(db).consolidate()
-        touched = (
-            da.df.select(*[F.col(k).alias(j) for k, j in zip(self.keys_a, self._jks)])
-            .union(
-                db.df.select(*[F.col(k).alias(j) for k, j in zip(self.keys_b, self._jks)])
-            )
-            .distinct()
-        )
-        # eqNullSafe: NULL join keys never *match* (plain equality in
-        # the join below) but a NULL-keyed left insert still changes
-        # the null-extended output, so it must reach the recompute.
-        a_t = self._semi(self._a.df, self.keys_a, touched)
-        b_t = self._semi(self._b.df, self.keys_b, touched)
-        am = ZSet(a_t).to_multiset_df()
-        bm = ZSet(b_t).to_multiset_df()
-        on = None
-        for ka, kb in zip(self.keys_a, self.keys_b):
-            eq = am[ka] == bm[kb]
-            on = eq if on is None else (on & eq)
-        joined = am.join(bm, on, self.how)
+    def _eval(self, a: DataFrame, b: DataFrame) -> ZSet:
+        am = ZSet(a).to_multiset_df()
+        bm = ZSet(b).to_multiset_df()
+        joined = am.join(bm, _eq_keys(am, self.keys_a, bm, self.keys_b), self.how)
         jks = [
             (
                 F.col(ka)
@@ -1174,34 +964,18 @@ class IncrementalOuterJoin:
             ).alias(j)
             for ka, kb, j in zip(self.keys_a, self.keys_b, self._jks)
         ]
-        new_rows = joined.select(*self.project, *jks).localCheckpoint(eager=False)
+        return ZSet.from_df(joined.select(*self.project, *jks))
 
-        if self._out is None:
-            delta = ZSet.from_df(new_rows)
-            self._out = new_rows
-        else:
-            old_rows = self._semi(self._out, self._jks, touched)
-            delta = ZSet.from_df(new_rows).subtract(ZSet.from_df(old_rows))
-            anti_cond = None
-            for j, t in zip(self._jks, touched.columns):
-                eq = self._out[j].eqNullSafe(touched[t])
-                anti_cond = eq if anti_cond is None else (anti_cond & eq)
-            self._out = self._out.join(touched, anti_cond, "left_anti").unionByName(new_rows)
-        self._steps += 1
-        if self._steps % self._checkpoint_every == 0:
-            self._a = ZSet(self._a.df.localCheckpoint(eager=False))
-            self._b = ZSet(self._b.df.localCheckpoint(eager=False))
-            self._out = self._out.localCheckpoint(eager=False)
+    def step(self, da: ZSet, db: ZSet) -> ZSet:
+        delta = super().step(da, db)
         payload = [c for c in delta.df.columns if c not in self._jks and c != WEIGHT]
         return delta.map(*[F.col(c) for c in payload]).consolidate()
 
     def snapshot(self) -> DataFrame:
-        if self._out is None:
-            raise ValueError("no steps applied")
-        return self._out.drop(*self._jks)
+        return super().snapshot().drop(*self._jks)
 
 
-class IncrementalTopK:
+class IncrementalTopK(_TouchedKeyRecompute):
     """Per-group TopK maintained incrementally (reference:
     DBSPIndexedTopKOperator / window-based TopK circuits): keep the
     integrated input; on a delta, recompute the TopK of only the
@@ -1224,46 +998,18 @@ class IncrementalTopK:
         self.k = k
         self.rank_alias = rank_alias
         self._win = Window.partitionBy(*keys).orderBy(*order)
-        self._input: ZSet | None = None
-        self._out: DataFrame | None = None
-        self._steps = 0
-        self._checkpoint_every = checkpoint_every
+        super().__init__([keys], keys, checkpoint_every)
 
-    def step(self, delta: ZSet) -> ZSet:
-        self._input = delta if self._input is None else self._input.add(delta).consolidate()
-        touched = delta.df.select(*self.keys).distinct()
-        state_touched = _join_on_keys(self._input.df, self.keys, touched, "leftsemi").select(
-            *self._input.df.columns
-        )
-        new_rows = (
-            ZSet(state_touched)
+    def _eval(self, state: DataFrame) -> ZSet:
+        return ZSet.from_df(
+            ZSet(state)
             .to_multiset_df()
             .withColumn(self.rank_alias, F.row_number().over(self._win).cast("bigint"))
             .where(F.col(self.rank_alias) <= self.k)
-            .localCheckpoint(eager=False)
         )
-        if self._out is None:
-            out_delta = ZSet.from_df(new_rows)
-            self._out = new_rows
-        else:
-            old_rows = _join_on_keys(self._out, self.keys, touched, "leftsemi")
-            out_delta = ZSet.from_df(new_rows).subtract(ZSet.from_df(old_rows)).consolidate()
-            self._out = _join_on_keys(self._out, self.keys, touched, "left_anti").unionByName(
-                new_rows
-            )
-        self._steps += 1
-        if self._steps % self._checkpoint_every == 0:
-            self._input = ZSet(self._input.df.localCheckpoint(eager=False))
-            self._out = self._out.localCheckpoint(eager=False)
-        return out_delta
-
-    def snapshot(self) -> DataFrame:
-        if self._out is None:
-            raise ValueError("no steps applied")
-        return self._out
 
 
-class IncrementalPartitionedWindow:
+class IncrementalPartitionedWindow(_TouchedKeyRecompute):
     """Window-function views — ROW_NUMBER/RANK/DENSE_RANK/LAG/LEAD/
     NTILE and SUM/COUNT/AVG/MIN/MAX OVER (PARTITION BY … ORDER BY …) —
     maintained by *affected-partition recompute* (reference:
@@ -1292,39 +1038,10 @@ class IncrementalPartitionedWindow:
         self.part_keys = part_keys
         self.select_items = select_items
         self.cond = cond
-        self._input: ZSet | None = None
-        self._out: DataFrame | None = None
-        self._steps = 0
-        self._checkpoint_every = checkpoint_every
+        super().__init__([part_keys], part_keys, checkpoint_every)
+
+    def _eval(self, state: DataFrame) -> ZSet:
+        return ZSet.from_df(ZSet(state).to_multiset_df().selectExpr(*self.select_items))
 
     def step(self, delta: ZSet) -> ZSet:
-        z = delta if self.cond is None else delta.filter(self.cond)
-        self._input = z if self._input is None else self._input.add(z).consolidate()
-
-        touched = z.df.select(*self.part_keys).distinct()
-        state_touched = _join_on_keys(self._input.df, self.part_keys, touched, "leftsemi")
-        new_rows = (
-            ZSet(state_touched)
-            .to_multiset_df()
-            .selectExpr(*self.select_items)
-            .localCheckpoint(eager=False)
-        )
-        if self._out is None:
-            out_delta = ZSet.from_df(new_rows)
-            self._out = new_rows
-        else:
-            old_rows = _join_on_keys(self._out, self.part_keys, touched, "leftsemi")
-            out_delta = ZSet.from_df(new_rows).subtract(ZSet.from_df(old_rows)).consolidate()
-            self._out = _join_on_keys(self._out, self.part_keys, touched, "left_anti").unionByName(
-                new_rows
-            )
-        self._steps += 1
-        if self._steps % self._checkpoint_every == 0:
-            self._input = ZSet(self._input.df.localCheckpoint(eager=False))
-            self._out = self._out.localCheckpoint(eager=False)
-        return out_delta
-
-    def snapshot(self) -> DataFrame:
-        if self._out is None:
-            raise ValueError("no steps applied")
-        return self._out
+        return super().step(delta if self.cond is None else delta.filter(self.cond))

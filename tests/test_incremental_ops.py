@@ -6,6 +6,8 @@ batch query over the integrated input — at every step."""
 from __future__ import annotations
 
 import random
+import uuid
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,8 +16,18 @@ from sql_to_dbsp_compiler_spark.plans.incremental import (
     AggSpec,
     IncrementalDistinct,
     IncrementalFilterMap,
+    IncrementalGroupRecomputeAgg,
     IncrementalJoin,
+    IncrementalKeyedNotIn,
     IncrementalLinearAgg,
+    IncrementalNullAwareNotIn,
+    IncrementalOuterJoin,
+    IncrementalPartitionedWindow,
+    IncrementalRangeScalarAgg,
+    IncrementalRangeSemiAnti,
+    IncrementalSemiAnti,
+    IncrementalSetOp,
+    IncrementalTopK,
 )
 from sql_to_dbsp_compiler_spark.plans.zset import WEIGHT, ZSet, incremental_join
 
@@ -272,3 +284,157 @@ def test_incremental_topk_every_step(spark):
         )
         assert _rows(acc) == _rows(ZSet.from_df(expect))
     assert _rows(ZSet.from_df(op.snapshot())) == _rows(acc)
+
+
+# Hand-made signed streams over A(id, k, v) and B(k, v): NULL keys and
+# values, duplicates, deletes, one-sided steps (the other input is
+# ZSet.empty), and a B that starts empty, holds a NULL key, then is
+# emptied again (every mode of NOT IN). Each side has four non-empty
+# steps, so with checkpoint_every=2 every integral merges runs and
+# folds its base (the fold needs 4 adds).
+A_SCHEMA, B_SCHEMA = "id int, k int, v int", "k int, v int"
+A_STEPS = [
+    [(1, 1, 5, 1), (2, None, 3, 1), (3, 2, 7, 1), (4, 1, 2, 1)],
+    [(5, 3, 1, 1)],
+    [(2, None, 3, -1), (6, None, 4, 1)],
+    [],
+    [(1, 1, 5, -1), (7, 2, 9, 1), (3, 2, 7, -1), (8, 1, None, 1)],
+]
+B_STEPS = [
+    [],
+    [(1, 2, 1), (2, 7, 1), (1, 2, 1)],
+    [(None, 4, 1), (2, None, 1)],
+    [(None, 4, -1), (3, 1, 1)],
+    [(1, 2, -2), (2, None, -1), (2, 7, -1), (3, 1, -1)],
+]
+
+
+def _one_partition(spark, schema, rows):
+    """``rows`` as a one-partition frame, as a small delta is. At the
+    session's default parallelism every Spark stage of a step would
+    run one task per partition of each integrated batch, which makes
+    this test several times slower."""
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+
+
+def _delta(spark, schema, rows) -> ZSet:
+    z = ZSet(_one_partition(spark, schema + f", {WEIGHT} long", rows))
+    return z if rows else ZSet.empty(z.df)
+
+
+def _cols(z: ZSet, *exprs: str) -> ZSet:
+    return z.map(*[F.expr(e) for e in exprs])
+
+
+# name -> (operator, its step inputs from the A and B deltas, batch SQL
+# over the integrated inputs ivm_a / ivm_b)
+TWO_INPUT_OPS = {
+    "set_op": (
+        lambda: IncrementalSetOp("except_all", checkpoint_every=2),
+        lambda da, db: (_cols(da, "k", "v"), db),
+        "SELECT k, v FROM ivm_a EXCEPT ALL SELECT k, v FROM ivm_b",
+    ),
+    "semi_anti": (
+        lambda: IncrementalSemiAnti(["k"], checkpoint_every=2),
+        lambda da, db: (da, _cols(db, "k AS __k0")),
+        "SELECT * FROM ivm_a a WHERE EXISTS (SELECT 1 FROM ivm_b b WHERE b.k = a.k)",
+    ),
+    "range_semi_anti": (
+        lambda: IncrementalRangeSemiAnti(["k"], "__b_v < v", anti=True, checkpoint_every=2),
+        lambda da, db: (da, _cols(db, "k AS __k0", "v AS __b_v")),
+        "SELECT * FROM ivm_a a WHERE NOT EXISTS"
+        " (SELECT 1 FROM ivm_b b WHERE b.k = a.k AND b.v < a.v)",
+    ),
+    "range_scalar_agg": (
+        lambda: IncrementalRangeScalarAgg(["k"], "__b_v < v", "count", "n", checkpoint_every=2),
+        lambda da, db: (da, _cols(db, "k AS __k0", "v AS __b_v", "v AS __arg")),
+        "SELECT a.id, a.k, a.v, COUNT(b.v) AS n FROM ivm_a a"
+        " LEFT JOIN ivm_b b ON b.k = a.k AND b.v < a.v GROUP BY a.id, a.k, a.v",
+    ),
+    "null_aware_not_in": (
+        lambda: IncrementalNullAwareNotIn("k", checkpoint_every=2),
+        lambda da, db: (da, _cols(db, "k AS __k0")),
+        "SELECT * FROM ivm_a WHERE k NOT IN (SELECT k FROM ivm_b)",
+    ),
+    "keyed_not_in": (
+        lambda: IncrementalKeyedNotIn("v", ["k"], checkpoint_every=2),
+        lambda da, db: (da, _cols(db, "k AS __k0", "v AS __v")),
+        "SELECT * FROM ivm_a a WHERE v NOT IN (SELECT b.v FROM ivm_b b WHERE b.k = a.k)",
+    ),
+    "outer_join": (
+        lambda: IncrementalOuterJoin(
+            "k", "bk", [F.col(c) for c in ("id", "k", "v", "bk", "bv")], how="full",
+            checkpoint_every=2,
+        ),
+        lambda da, db: (da, _cols(db, "k AS bk", "v AS bv")),
+        "SELECT a.id, a.k, a.v, b.k AS bk, b.v AS bv FROM ivm_a a FULL JOIN ivm_b b ON a.k = b.k",
+    ),
+}
+ONE_INPUT_OPS = {
+    "distinct": (
+        lambda: IncrementalDistinct(checkpoint_every=2),
+        lambda da, db: (_cols(da, "k", "v"),),
+    ),
+    "group_recompute_agg": (
+        lambda: IncrementalGroupRecomputeAgg(["k"], [F.max("v").alias("mx")], checkpoint_every=2),
+        lambda da, db: (da,),
+    ),
+    "topk": (
+        lambda: IncrementalTopK(["k"], [F.col("v").desc(), F.col("id")], 2, checkpoint_every=2),
+        lambda da, db: (da,),
+    ),
+    "partitioned_window": (
+        lambda: IncrementalPartitionedWindow(
+            ["k"], ["id", "k", "SUM(v) OVER (PARTITION BY k ORDER BY id) AS s"], checkpoint_every=2
+        ),
+        lambda da, db: (da,),
+    ),
+}
+
+
+def _jobs_in(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"ivm-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", sorted(TWO_INPUT_OPS))
+def test_two_input_ops_through_compaction(spark, name):
+    """Integrated output == batch SQL over the integrated inputs at every
+    step, across the merges and base folds of checkpoint_every=2. The
+    output is integrated in Python, one collect per step."""
+    make, inputs, sql = TWO_INPUT_OPS[name]
+    op = make()
+    live_a, live_b, acc = Counter(), Counter(), Counter()
+    for i, (a_rows, b_rows) in enumerate(zip(A_STEPS, B_STEPS)):
+        for live, rows in ((live_a, a_rows), (live_b, b_rows)):
+            for *row, w in rows:
+                live[tuple(row)] += w
+        da, db = _delta(spark, A_SCHEMA, a_rows), _delta(spark, B_SCHEMA, b_rows)
+        for *row, w in op.step(*inputs(da, db)).df.collect():
+            acc[tuple(row)] += w
+        for view, schema, live in (("ivm_a", A_SCHEMA, live_a), ("ivm_b", B_SCHEMA, live_b)):
+            rows = [r for r, n in live.items() for _ in range(n)]
+            _one_partition(spark, schema, rows).createOrReplaceTempView(view)
+        expect = Counter(tuple(r) for r in spark.sql(sql).collect())
+        assert acc == expect, f"{name} diverged at step {i}"
+
+
+@pytest.mark.parametrize("name", sorted({**TWO_INPUT_OPS, **ONE_INPUT_OPS}))
+def test_all_empty_step_runs_no_spark_job(spark, name):
+    """A step whose every input is ZSet.empty returns an is_empty Z-set
+    and runs no Spark job, also once the operator holds state."""
+    make, inputs = {**TWO_INPUT_OPS, **ONE_INPUT_OPS}[name][:2]
+    op = make()
+    op.step(*inputs(_delta(spark, A_SCHEMA, A_STEPS[0]), _delta(spark, B_SCHEMA, B_STEPS[1])))
+    empty = inputs(_delta(spark, A_SCHEMA, []), _delta(spark, B_SCHEMA, []))
+    out, jobs = _jobs_in(spark, lambda: op.step(*empty))
+    assert out.is_empty
+    assert jobs == 0
