@@ -5340,11 +5340,14 @@ class IncrementalProgram:
     appends its deltas rather than re-consolidating the state, and a
     table with no delta in a step feeds the views a ``ZSet.empty``
     that Catalyst and the operators prune.
-    ``checkpoint_every`` is the compaction cadence of the table and
-    view Integrals only: their raw deltas are merged every
-    ``checkpoint_every`` steps, and folded into the consolidated state
-    every ``checkpoint_every``² steps. The operators are built without
-    it, so each compacts its own state at its default cadence of 8.
+    ``checkpoint_every`` paces the table and view Integrals only:
+    their raw deltas are merged every ``checkpoint_every`` steps into
+    consolidated runs, and a merge takes in only the runs of no more
+    than ``checkpoint_every`` times its size, so a small step never
+    re-reads the bulk load. The operators are built without it, so
+    each uses the default of 8; the linear aggregate checkpoints its
+    per-group state every step. Join-aggregate views feed the
+    aggregate the join delta unconsolidated (it sums weights anyway).
     """
 
     def __init__(
@@ -5644,7 +5647,9 @@ class IncrementalProgram:
                     d = d.filter(op.having)
                 d = d.map(*[F.col(c) for c in op.out_cols])
             elif isinstance(op, _JoinAggOp):
-                jd = op.join_op.step(delta_of(op.src_a), delta_of(op.src_b))
+                # the aggregate sums weights: it takes the join delta
+                # unconsolidated, sparing a shuffle of every join column
+                jd = op.join_op.step_unconsolidated(delta_of(op.src_a), delta_of(op.src_b))
                 d = op.agg_op.step(jd)
                 if op.having is not None:
                     d = d.filter(op.having)
@@ -5668,7 +5673,11 @@ class IncrementalProgram:
             elif isinstance(op, (_AliasJoinAggOp, _AliasOuterJoinAggOp)):
                 da = ZSet(_apply_linear(delta_of(op.src_a).df, op.pre_a, None))
                 db = ZSet(_apply_linear(delta_of(op.src_b).df, op.pre_b, None))
-                d = op.agg_op.step(op.join_op.step(da, db))
+                if isinstance(op, _AliasJoinAggOp):
+                    jd = op.join_op.step_unconsolidated(da, db)
+                else:
+                    jd = op.join_op.step(da, db)
+                d = op.agg_op.step(jd)
                 if op.having is not None:
                     d = d.filter(op.having)
                 d = d.map(*[F.expr(i) for i in op.sel_exprs])
@@ -5730,9 +5739,11 @@ class IncrementalProgram:
                 def _aleg(i):
                     return ZSet(_apply_linear(delta_of(op.srcs[i]).df, op.pres[i], None))
 
-                jd = op.ops[0].step(_aleg(0), _aleg(1))
-                for j, nxt in enumerate(op.ops[1:], start=2):
-                    jd = nxt.step(jd, _aleg(j))
+                # only the last stage feeds the aggregate unconsolidated
+                jd = _aleg(0)
+                for j, stage in enumerate(op.ops, start=1):
+                    last = j == len(op.ops)
+                    jd = (stage.step_unconsolidated if last else stage.step)(jd, _aleg(j))
                 d = op.agg_op.step(jd)
                 if op.having is not None:
                     d = d.filter(op.having)

@@ -9,11 +9,10 @@ DataFrames and exposes ``step(delta) -> delta``:
 
 - :class:`IncrementalFilterMap` — linear (stateless): the delta of a
   select/filter is the select/filter of the delta.
-- :class:`IncrementalLinearAgg` — SUM/COUNT/AVG group-bys: aggregate
-  the (small) delta, equi-join it with per-key state, emit
-  retraction+insertion rows for affected keys only. At scale the
-  state join shuffles |delta| keys against bucketed state — never
-  rescans the input.
+- :class:`IncrementalLinearAgg` — SUM/COUNT/AVG group-bys: one
+  aggregate over the per-group state and the delta's weighted rows,
+  emitting retraction+insertion rows for the changed groups only. It
+  reads every group once per step, never the integrated input.
 - :class:`IncrementalJoin` — bilinear rule Δ(A⋈B) = ΔA⋈B + A⋈ΔB +
   ΔA⋈ΔB. Each side's state is an :class:`~.zset.Integral`, read as an
   unconsolidated sum, and a term with a ``ZSet.empty`` side is
@@ -21,13 +20,14 @@ DataFrames and exposes ``step(delta) -> delta``:
   against the other side's state.
 
 Lineage: operator state is :class:`~.zset.Integral` objects, each of
-which compacts (consolidates and checkpoints) its batches every
-``checkpoint_every`` adds. Under AQE ``localCheckpoint`` is an action,
-not a lazy marker, and two more places run it: IncrementalLinearAgg
-checkpoints its merged state every step, and the touched-key
-recompute, distinct and set-op operators materialize each output
-delta once (``_materialize``). A step whose every input is
-``ZSet.empty`` runs no Spark job.
+which compacts (consolidates and checkpoints) its raw batches every
+``checkpoint_every`` adds, together with the runs of no larger size
+class. Under AQE ``localCheckpoint`` is an action, not a lazy marker,
+and two more places run it: IncrementalLinearAgg checkpoints its
+merged per-group state once per step, and the touched-key recompute,
+distinct and set-op operators materialize each output delta once
+(``_materialize``). A step whose every input is ``ZSet.empty`` runs
+no Spark job.
 """
 
 from __future__ import annotations
@@ -191,18 +191,27 @@ class AggSpec:
 class IncrementalLinearAgg:
     """GROUP BY keys with linear aggregates (SUM / COUNT / AVG).
 
-    State: one row per live key holding Σ(expr·w) per SUM/AVG spec and
-    Σw (+ per-column non-null counts for COUNT(col)/AVG). A step:
+    State: one row per live key holding Σw (``__cnt``), Σ(expr·w) per
+    SUM/AVG spec (``__s{i}``) and a non-null count per COUNT(col)/SUM/
+    AVG spec (``__c{i}``; it tells a group with no non-null value, whose
+    SQL SUM is NULL, from a genuine zero sum). A step:
 
-    1. aggregate the delta (map-side combine, |delta| rows in),
-    2. full-outer equi-join delta-agg with state on the keys,
-    3. output = retract old finished row (w=-1) + insert new finished
-       row (w=+1) for touched keys; groups appear/disappear with
-       Σw > 0,
-    4. state += delta-agg.
+    1. unions the state rows with the delta's weighted contribution
+       rows and aggregates them in one ``groupBy(keys)``, one shuffle
+       (groupBy puts NULL keys in one group, as SQL does). State rows
+       feed the old and the new sums; delta rows feed the new sums and
+       mark the group touched;
+    2. checkpoints that merged frame, the step's one Spark action;
+    3. emits, in-row, the old finished row (w=-1) and the new one
+       (w=+1) of each touched group whose finished values changed;
+       a group exists while Σw > 0;
+    4. keeps the merged new sums as the next state.
 
-    Step cost is |delta| + |touched keys| — independent of the
-    integrated input size, which is the entire point of DBSP."""
+    The state pass reads every group once, so a step costs |delta| +
+    |groups|, not |integrated input|. A step with a ``ZSet.empty``
+    delta runs no Spark job. The state is cut every step, so
+    ``checkpoint_every`` (kept for the common operator signature)
+    changes nothing here."""
 
     def __init__(
         self,
@@ -217,138 +226,108 @@ class IncrementalLinearAgg:
         self.specs = specs
         self.cond = cond
         self._state: DataFrame | None = None  # keys + __cnt + per-spec sums
-        self._steps = 0
-        self._checkpoint_every = checkpoint_every
+        # sum column of the state -> its type, fixed at the first step
+        self._types: dict = {}
+        self._zero: ZSet | None = None
 
     # -- internal helpers -------------------------------------------------
-    def _delta_agg(self, delta: ZSet) -> DataFrame:
+    def _contributions(self, delta: ZSet) -> DataFrame:
+        """The delta's rows as keys plus, per state column, the row's
+        weighted contribution to that column's sum."""
         z = delta if self.cond is None else delta.filter(self.cond)
         w = F.col(WEIGHT)
-        aggs = [F.sum(w).alias("__cnt")]
+        cols = [w.alias("__cnt")]
         for i, s in enumerate(self.specs):
             if s.kind == "count" and s.expr is None:
                 continue  # COUNT(*) reuses __cnt
-            if s.kind == "count":
-                aggs.append(F.sum(F.when(s.expr.isNotNull(), w).otherwise(F.lit(0))).alias(f"__c{i}"))
-            else:  # sum / avg: Σ(expr·w) + non-null count (the count
-                # distinguishes "no non-null values yet" → SQL NULL sum
-                # from a genuine zero sum)
-                aggs.append(F.sum(s.expr * w).alias(f"__s{i}"))
-                aggs.append(
-                    F.sum(F.when(s.expr.isNotNull(), w).otherwise(F.lit(0))).alias(f"__c{i}")
-                )
-        return z.df.groupBy(*self.keys).agg(*aggs)
+            if s.kind != "count":
+                cols.append((s.expr * w).alias(f"__s{i}"))
+            cols.append(F.when(s.expr.isNotNull(), w).otherwise(F.lit(0)).alias(f"__c{i}"))
+        return z.df.select(*self.keys, *cols)
 
     def _finish(self, prefix: str) -> list[Column]:
-        """Finished output columns from state columns named
-        {prefix}__cnt / {prefix}__s{i} / {prefix}__c{i}."""
+        """Finished output columns, named by the specs, from state
+        columns named {prefix}__cnt / {prefix}__s{i} / {prefix}__c{i}."""
         cols = []
         for i, s in enumerate(self.specs):
             if s.kind == "count" and s.expr is None:
-                cols.append(F.col(f"{prefix}__cnt").alias(s.alias))
+                col = F.col(f"{prefix}__cnt")
             elif s.kind == "count":
-                cols.append(F.col(f"{prefix}__c{i}").alias(s.alias))
+                col = F.col(f"{prefix}__c{i}")
             elif s.kind == "sum":
-                # SQL SUM over a group with only NULLs is NULL; with our
-                # Σ(expr·w) NULLs contribute NULL→sum skips them, but an
-                # all-NULL group yields NULL already. Weighted sum of
-                # nothing is NULL too — matches.
-                cols.append(F.col(f"{prefix}__s{i}").alias(s.alias))
+                # the state keeps a sum NULL while its non-null count is 0
+                col = F.col(f"{prefix}__s{i}")
             else:  # avg: NULL when no non-null values (guarded — ANSI
                 # mode raises on the 0-divisor branch otherwise)
-                cols.append(
-                    F.when(
-                        F.col(f"{prefix}__c{i}") > 0,
-                        F.col(f"{prefix}__s{i}") / F.col(f"{prefix}__c{i}"),
-                    ).alias(s.alias)
+                col = F.when(
+                    F.col(f"{prefix}__c{i}") > 0,
+                    F.col(f"{prefix}__s{i}") / F.col(f"{prefix}__c{i}"),
                 )
+            cols.append(col)
         return cols
+
+    def _rows(self, df: DataFrame, prefix: str, weight: int) -> DataFrame:
+        finished = [c.alias(s.alias) for c, s in zip(self._finish(prefix), self.specs)]
+        return df.select(*self.keys, *finished, F.lit(weight).cast("long").alias(WEIGHT))
+
+    def _merged(self, delta: ZSet) -> DataFrame:
+        """One row per group of the state or the delta: ``__touched``,
+        then each state column's sum before (``old…``) and after
+        (``new…``) the delta, in the state's types. One aggregate over
+        state ∪ contribution rows, so one shuffle."""
+        rows = self._state.withColumn("__d", F.lit(False)).unionByName(
+            self._contributions(delta).withColumn("__d", F.lit(True))
+        )
+        old = {c: F.sum(F.when(~F.col("__d"), F.col(c))).cast(t) for c, t in self._types.items()}
+        new = {c: F.sum(c).cast(t) for c, t in self._types.items()}
+        for i, s in enumerate(self.specs):
+            if s.kind in ("sum", "avg"):
+                # SQL: a group with no non-null value has a NULL sum,
+                # also when its contributions cancel (+x then -x)
+                new[f"__s{i}"] = F.when(new[f"__c{i}"] != 0, new[f"__s{i}"])
+        return rows.groupBy(*self.keys).agg(
+            F.max("__d").alias("__touched"),
+            *[e.alias(f"old{c}") for c, e in old.items()],
+            *[e.alias(f"new{c}") for c, e in new.items()],
+        )
 
     # -- the operator ------------------------------------------------------
     def step(self, delta: ZSet) -> ZSet:
-        d = self._delta_agg(delta)
-        state_cols = [c for c in d.columns if c not in self.keys]
-
         if self._state is None:
-            # Even a pure-insert delta can need the NULL fix: non-null
-            # contributions may cancel (e.g. +x then -x) leaving Σ=0
-            # with non-null count 0, which SQL-wise is a NULL sum.
-            for i, s in enumerate(self.specs):
-                if s.kind in ("sum", "avg"):
-                    d = d.withColumn(
-                        f"__s{i}",
-                        F.when(F.col(f"__c{i}") == 0, F.lit(None)).otherwise(F.col(f"__s{i}")),
-                    )
-            new_state = d.where(F.col("__cnt") != 0)
-            out_new = new_state.where(F.col("__cnt") > 0).select(
-                *self.keys, *self._finish(""), F.lit(1).cast("long").alias(WEIGHT)
-            )
-            self._state = new_state
-            self._bump()
-            return ZSet(out_new)
+            # The empty state fixes the state column types as the sums'
+            # types; each merge casts back to them, because a decimal
+            # sum over the state would otherwise widen every step.
+            contrib = self._contributions(delta)
+            self._state = contrib.groupBy(*self.keys).agg(
+                *[F.sum(c).alias(c) for c in contrib.columns[len(self.keys):]]
+            ).limit(0)
+            sums = self._state.schema.fields[len(self.keys):]
+            self._types = {f.name: f.dataType for f in sums}
+            self._zero = ZSet.empty(self._rows(self._state, "", 1))
+        if delta.is_empty:
+            return self._zero
+        merged = self._merged(delta).localCheckpoint(eager=False)
 
-        st = self._state
-        sd = st.select(
-            *[F.col(k).alias(f"__k{j}") for j, k in enumerate(self.keys)],
-            *[F.col(c).alias(f"o{c}") for c in state_cols],
+        old_live = F.coalesce(F.col("old__cnt"), F.lit(0)) > 0
+        new_live = F.col("new__cnt") > 0
+        same = reduce(
+            operator.and_,
+            [o.eqNullSafe(n) for o, n in zip(self._finish("old"), self._finish("new"))],
         )
-        key_eq = None
-        for j, k in enumerate(self.keys):
-            eq = d[k].eqNullSafe(F.col(f"__k{j}"))
-            key_eq = eq if key_eq is None else (key_eq & eq)
-        joined = d.join(sd, key_eq, "full_outer")
-        # coalesce keys (either side may be absent)
-        keysel = [
-            F.coalesce(d[k], F.col(f"__k{j}")).alias(k) for j, k in enumerate(self.keys)
-        ]
-        merged = joined.select(
-            *keysel,
-            d["__cnt"].isNotNull().alias("__touched"),
-            *[F.col(f"o{c}").alias(f"old{c}") for c in state_cols],
-            *[
-                (
-                    F.coalesce(F.col(f"o{c}"), F.lit(0))
-                    + F.coalesce(d[c], F.lit(0))
-                ).alias(f"new{c}")
-                # NB: for __s{i} sums NULL means "no non-null contributions
-                # yet"; adding with coalesce(…,0) would turn NULL+NULL into
-                # 0. Handled below by nulling sums when count is 0.
-                for c in state_cols
-            ],
-        )
-        # where a group's non-null count is 0, its sum must be NULL (SQL)
-        fixes = {}
-        for i, s in enumerate(self.specs):
-            if s.kind in ("sum", "avg"):
-                fixes[f"new__s{i}"] = F.when(F.col(f"new__c{i}") == 0, F.lit(None)).otherwise(
-                    F.col(f"new__s{i}")
-                )
-        for c, expr in fixes.items():
-            merged = merged.withColumn(c, expr)
-        merged = merged.localCheckpoint(eager=False)
-
-        retract = merged.where(F.col("__touched") & (F.col("old__cnt") > 0)).select(
-            *self.keys, *self._finish("old"), F.lit(-1).cast("long").alias(WEIGHT)
-        )
-        insert = merged.where(F.col("__touched") & (F.col("new__cnt") > 0)).select(
-            *self.keys, *self._finish("new"), F.lit(1).cast("long").alias(WEIGHT)
-        )
-
+        # a touched group whose finished row is unchanged emits nothing:
+        # its retraction and insertion would cancel
+        changed = F.col("__touched") & ~(old_live & new_live & same)
+        retract = self._rows(merged.where(changed & old_live), "old", -1)
+        insert = self._rows(merged.where(changed & new_live), "new", 1)
         self._state = merged.where(F.col("new__cnt") != 0).select(
-            *self.keys, *[F.col(f"new{c}").alias(c) for c in state_cols]
+            *self.keys, *[F.col(f"new{c}").alias(c) for c in self._types]
         )
-        self._bump()
-        return ZSet(retract.unionByName(insert)).consolidate()
-
-    def _bump(self) -> None:
-        self._steps += 1
-        if self._steps % self._checkpoint_every == 0 and self._state is not None:
-            self._state = self._state.localCheckpoint(eager=False)
+        return ZSet(retract.unionByName(insert))
 
     def snapshot(self) -> DataFrame:
         if self._state is None:
             raise ValueError("no steps applied")
-        return self._state.where(F.col("__cnt") > 0).select(*self.keys, *self._finish(""))
+        return self._rows(self._state.where(F.col("__cnt") > 0), "", 1).drop(WEIGHT)
 
 
 class IncrementalJoin:
@@ -365,6 +344,12 @@ class IncrementalJoin:
         self._checkpoint_every = checkpoint_every
 
     def step(self, da: ZSet, db: ZSet) -> ZSet:
+        return self.step_unconsolidated(da, db).consolidate()
+
+    def step_unconsolidated(self, da: ZSet, db: ZSet) -> ZSet:
+        """``step``'s output delta before its consolidate: a valid Z-set
+        whose equal rows are not yet merged, for a consumer that sums
+        weights anyway (a linear aggregate)."""
         if self._a is None:
             self._a = Integral(ZSet.empty(da.df), self._checkpoint_every)
             self._b = Integral(ZSet.empty(db.df), self._checkpoint_every)
@@ -373,7 +358,7 @@ class IncrementalJoin:
         self._b.add(db)
         if self.project is not None:
             out = out.map(*self.project)
-        return out.consolidate()
+        return out
 
 
 class IncrementalSemiAnti:
@@ -828,8 +813,9 @@ class IncrementalMixedAgg:
       pre-step joined row, insert the post-step joined row, consolidate
       (unchanged groups cancel).
 
-    Per-step cost ∝ |delta| + |touched keys| state joins — independent
-    of the integrated input size. All joins are null-safe (NULL keys
+    Per-step cost ∝ |delta| + |touched keys| state joins, plus each
+    linear aggregate's pass over its groups; the integrated input is
+    never re-read. All joins are null-safe (NULL keys
     form one SQL group); absent distinct branches coalesce to 0
     (COUNT(DISTINCT col) of an all-NULL group is 0, but the group
     itself still exists)."""

@@ -17,9 +17,10 @@ a groupBy. That mirrors DBSP's laziness and is exactly the plan shape
 you want at scale: one consolidation shuffle at the end instead of
 one per operator.
 
-Integrated state is an :class:`Integral`: a few batches that a step
-appends to and that are compacted only every ``checkpoint_every``
-adds, so a step's Spark work follows its delta, not the state size.
+Integrated state is an :class:`Integral`: raw batches that a step
+appends to, merged every ``checkpoint_every`` adds into consolidated
+runs kept by size class (a geometric spine, as in an LSM tree), so a
+step's Spark work follows its delta, not the state size.
 ``ZSet.empty`` is the statically empty Z-set; joins and sums skip it.
 """
 
@@ -169,14 +170,22 @@ class Integral:
     kept as a few batches so that a step appends instead of re-reading
     the whole state (Structured Streaming's delta files plus snapshots).
 
-    Three levels, all paced by ``checkpoint_every``:
+    Two levels, both paced by ``checkpoint_every``:
 
     - raw delta batches, appended by ``add`` with no Spark job;
-    - runs: every ``checkpoint_every`` adds, the raw batches are merged
-      into one consolidated run, at a cost that follows those deltas;
-    - the base: every ``checkpoint_every``-th merge folds the runs into
-      the consolidated base, the one O(|state|) pass, paid once per
-      ``checkpoint_every``² adds.
+    - runs, each consolidated and checkpointed, ordered oldest first.
+      Every ``checkpoint_every`` adds, the raw batches are merged by
+      one ``_compact`` into a new run. That compaction also takes in
+      every trailing run whose size is at most ``checkpoint_every``
+      times the size merged so far (at least twice it), so the runs
+      form a geometric spine: each is more than that factor larger
+      than the next, and there are log-many. A small step never
+      re-reads a large run, such as the bulk base load.
+
+    A run's size is Catalyst's estimate of its bytes, read from the
+    optimized plan (no Spark job) when the run is compacted; an
+    unknown estimate (an RDD-backed frame) counts as the largest size.
+    An estimate only decides when runs merge, never ``value()``.
 
     ``value()`` is the unconsolidated sum of the levels. It is a valid
     input for linear and bilinear consumers (a join distributes over
@@ -185,28 +194,37 @@ class Integral:
 
     def __init__(self, init: ZSet, checkpoint_every: int = 8):
         """``init`` is the starting value: ``ZSet.empty`` for the zero,
-        else a Z-set that is compacted once into the base."""
+        else a Z-set that is compacted once into the first run."""
         if checkpoint_every < 1:
             raise ValueError("checkpoint_every must be >= 1")
         self._every = checkpoint_every
-        self._base = init if init.is_empty else _compact([init])
-        self._runs: list[ZSet] = []
+        # leads every sum, so value() stays in init's session
+        self._zero = init if init.is_empty else ZSet.empty(init.df)
+        self._runs: list[tuple[ZSet, int]] = []  # (run, estimated bytes)
         self._batches: list[ZSet] = []
+        if not init.is_empty:
+            self._merge([init])
 
     def add(self, delta: ZSet) -> None:
         if delta.is_empty:
             return
         self._batches.append(delta)
-        if len(self._batches) < self._every:
-            return
-        self._runs.append(_compact(self._batches))
-        self._batches = []
-        if len(self._runs) == self._every:
-            self._base = _compact([self._base, *self._runs])
-            self._runs = []
+        if len(self._batches) >= self._every:
+            self._merge(self._batches)
+            self._batches = []
+
+    def _merge(self, parts: list[ZSet]) -> None:
+        ratio = max(self._every, 2)
+        size = _estimated_bytes(_sum(parts).df) if self._runs else 0
+        while self._runs and self._runs[-1][1] <= ratio * size:
+            run, run_size = self._runs.pop()
+            parts = [run, *parts]
+            size += run_size
+        run = _compact([self._zero, *parts])
+        self._runs.append((run, _estimated_bytes(run.df)))
 
     def value(self) -> ZSet:
-        return _sum([self._base, *self._runs, *self._batches])
+        return _sum([self._zero, *(run for run, _ in self._runs), *self._batches])
 
     def snapshot(self) -> ZSet:
         return self.value().consolidate()
@@ -215,6 +233,18 @@ class Integral:
     def df(self) -> DataFrame:
         """``value()``'s frame, for plan inspection."""
         return self.value().df
+
+
+# Catalyst's sizeInBytes for a plan it cannot size (conf
+# spark.sql.defaultSizeInBytes, Long.MaxValue by default)
+_UNKNOWN_BYTES = 2**63 - 1
+
+
+def _estimated_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df``, capped at the "unknown"
+    value; planning only, no Spark job."""
+    est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return min(int(est), _UNKNOWN_BYTES)
 
 
 def _sum(parts: list[ZSet]) -> ZSet:

@@ -375,6 +375,10 @@ ONE_INPUT_OPS = {
         lambda: IncrementalDistinct(checkpoint_every=2),
         lambda da, db: (_cols(da, "k", "v"),),
     ),
+    "linear_agg": (
+        lambda: IncrementalLinearAgg(["k"], [AggSpec("s", "sum", F.col("v"))], checkpoint_every=2),
+        lambda da, db: (da,),
+    ),
     "group_recompute_agg": (
         lambda: IncrementalGroupRecomputeAgg(["k"], [F.max("v").alias("mx")], checkpoint_every=2),
         lambda da, db: (da,),
@@ -438,3 +442,70 @@ def test_all_empty_step_runs_no_spark_job(spark, name):
     out, jobs = _jobs_in(spark, lambda: op.step(*empty))
     assert out.is_empty
     assert jobs == 0
+
+
+# (id, k, v, weight) steps for the linear aggregate, one edge each
+LIN_SCHEMA = "id int, k string, v decimal(5,2)"
+LIN_STEPS = [
+    [(1, "a", "1.50", 1), (2, "a", "2.25", 1), (3, None, "4.00", 1), (4, None, None, 1),
+     (5, "n", None, 1), (6, "n", None, 1), (7, "u", "1.00", 1), (8, "u", "2.00", 1),
+     (9, "g", "3.00", 1)],
+    # +x/-x within the step leaves "c" one NULL: SUM is NULL, not 0;
+    # the NULL key's group loses its only non-null value
+    [(10, "c", "5.00", 1), (10, "c", "5.00", -1), (11, "c", None, 1), (3, None, "4.00", -1)],
+    [(9, "g", "3.00", -1)],  # "g" vanishes
+    [(7, "u", "1.00", -1), (12, "u", "1.00", 1)],  # aggregates unchanged
+    [(13, "g", "7.10", 1), (5, "n", None, -1)],  # "g" returns
+    [(1, "a", "1.50", -1), (2, "a", "2.25", -1), (14, None, "0.00", 1)],  # a genuine 0
+    [(14, None, "0.00", -1), (4, None, None, -1)],  # the NULL key's group vanishes
+    [],  # ZSet.empty: the zero, in the types of every other step's output
+]
+
+
+def _exchanges(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count("Exchange ")
+
+
+def test_linear_agg_edges_match_sql_every_step(spark):
+    """IncrementalLinearAgg's integrated output == Spark SQL over the
+    integrated input after every step: a NULL group key, all-NULL
+    SUM/AVG, a non-null count back at 0, a group that vanishes and
+    returns, an update that changes no aggregate (no rows out) and a
+    decimal SUM whose type never widens. The merge is one shuffle and
+    the emitted delta none."""
+    from decimal import Decimal
+
+    op = IncrementalLinearAgg(
+        ["k"],
+        [AggSpec("n", "count"), AggSpec("nv", "count", F.col("v")),
+         AggSpec("sv", "sum", F.col("v")), AggSpec("av", "avg", F.col("v"))],
+        checkpoint_every=2,
+    )
+    live, acc, schemas = Counter(), Counter(), set()
+    for i, rows in enumerate(LIN_STEPS):
+        rows = [(j, k, None if v is None else Decimal(v), w) for j, k, v, w in rows]
+        for *row, w in rows:
+            live[tuple(row)] += w
+        delta = _delta(spark, LIN_SCHEMA, rows)
+        out = op.step(delta)
+        emitted = out.df.collect()
+        for *row, w in emitted:
+            acc[tuple(row)] += w
+        schemas.add(out.df.schema.simpleString())
+        if i == 3:
+            assert emitted == [], "an unchanged group emitted rows"
+        if i == 1:
+            assert _exchanges(op._merged(delta)) == 1
+            assert _exchanges(out.df) == 0
+        _one_partition(
+            spark, LIN_SCHEMA, [r for r, n in live.items() for _ in range(n)]
+        ).createOrReplaceTempView("ivm_lin")
+        expect = Counter(
+            tuple(r)
+            for r in spark.sql(
+                "SELECT k, COUNT(*) AS n, COUNT(v) AS nv, SUM(v) AS sv, AVG(v) AS av"
+                " FROM ivm_lin GROUP BY k"
+            ).collect()
+        )
+        assert {r: n for r, n in acc.items() if n} == expect, f"diverged at step {i}"
+    assert len(schemas) == 1, schemas

@@ -125,3 +125,47 @@ def test_incremental_join_bilinear_rule(spark, sf_dir):
         assert got.rows() == want_deltas[t].rows(), f"step {t}"
         a_prev = a_prev.add(da_list[t]).consolidate()
         b_prev = b_prev.add(db_list[t]).consolidate()
+
+
+def test_integral_merges_runs_by_size_class(spark, monkeypatch):
+    """A large init plus 20 small adds at checkpoint_every=2: the value
+    is the running sum after every add, each merge is one compaction,
+    the init's run is never re-compacted while the small data stays
+    far under its size class, and the runs stay log-many."""
+    import math
+    from collections import Counter
+
+    from sql_to_dbsp_compiler_spark.plans import zset
+    from sql_to_dbsp_compiler_spark.plans.zset import WEIGHT, Integral
+
+    def keys(lo, hi, w):
+        # spark.range frames carry a Catalyst size estimate
+        return ZSet(
+            spark.range(lo, hi, 1, 1).select(
+                F.col("id").alias("k"), F.lit(w).cast("long").alias(WEIGHT)
+            )
+        )
+
+    integ = Integral(keys(0, 2000, 1), checkpoint_every=2)
+    (init_run, _), = integ._runs
+    compacted: list[list[ZSet]] = []
+
+    def counting_compact(parts):
+        compacted.append(parts)
+        return real_compact(parts)
+
+    real_compact = zset._compact
+    monkeypatch.setattr(zset, "_compact", counting_compact)
+    live = Counter(range(2000))
+    for i in range(20):
+        # inserts past the init's keys, and deletes of init keys
+        lo, w = (3000 + 5 * i, 1) if i % 2 else (5 * i, -1)
+        integ.add(keys(lo, lo + 5, w))
+        for k in range(lo, lo + 5):
+            live[k] += w
+        got = {k: n for k, n in integ.snapshot().df.collect()}
+        assert got == {k: n for k, n in live.items() if n}, f"add {i}"
+        merges = (i + 1) // 2
+        assert len(compacted) == merges, "one compaction per merge"
+        assert not any(p is init_run for parts in compacted for p in parts), f"add {i}"
+        assert len(integ._runs) <= 2 + math.log2(merges + 1), f"add {i}: {len(integ._runs)} runs"
