@@ -43,6 +43,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.incremental import IncrementalLinearAgg
 from ..plans.zset import WEIGHT, Integral, ZSet
 
 # ---------------------------------------------------------------------------
@@ -5322,6 +5323,50 @@ def _split_ctes(sql: str):
     return flagged, outer
 
 
+def _linear_agg(op) -> "IncrementalLinearAgg | None":
+    """The aggregate of an aggregate view's op when it is an
+    IncrementalLinearAgg, else None."""
+    if not isinstance(op, (_AggOp, _DistinctAggOp, _JoinAggOp, _AliasJoinAggOp,
+                           _AliasOuterJoinAggOp, _MultiJoinAggOp)):
+        return None
+    agg = op.op if isinstance(op, _AggOp) else op.agg_op
+    return agg if isinstance(agg, IncrementalLinearAgg) else None
+
+
+def _agg_view_rows(op, z: ZSet) -> ZSet:
+    """An aggregate view's HAVING and final projection over rows ``z`` of
+    its aggregate. Both are linear, so they map the aggregate's deltas
+    and its integrated rows alike."""
+    if op.having is not None:
+        z = z.filter(op.having)
+    if isinstance(op, (_AliasJoinAggOp, _AliasOuterJoinAggOp, _MultiJoinAggOp)):
+        return z.map(*[F.expr(i) for i in op.sel_exprs])
+    return z.map(*[F.col(c) for c in op.out_cols])
+
+
+class _AggViewState:
+    """The integrated value of an aggregate view whose aggregate is an
+    IncrementalLinearAgg, read from that aggregate's per-group state.
+    The view's deltas sum to exactly those rows (a step emits a changed
+    group's old and new finished rows), so an Integral of the deltas
+    would only store and compact the same data a second time. ``add``
+    keeps the Integral interface and has nothing to do."""
+
+    def __init__(self, zero: ZSet, op, agg: IncrementalLinearAgg):
+        self._zero = zero  # leads the sum: value() stays in the program's session
+        self._op = op
+        self._agg = agg
+
+    def add(self, delta: ZSet) -> None:
+        pass
+
+    def value(self) -> ZSet:
+        return self._zero.add(_agg_view_rows(self._op, ZSet.from_df(self._agg.snapshot())))
+
+    def snapshot(self) -> ZSet:
+        return self.value().consolidate()
+
+
 class IncrementalProgram:
     """Maintain a program's views under input Z-set deltas.
 
@@ -5339,7 +5384,9 @@ class IncrementalProgram:
     state of every operator but the linear aggregate, so a step
     appends its deltas rather than re-consolidating the state, and a
     table with no delta in a step feeds the views a ``ZSet.empty``
-    that Catalyst and the operators prune.
+    that Catalyst and the operators prune. A view over a linear
+    aggregate is the exception: its integrated value is read from the
+    aggregate's per-group state, which already holds it.
     ``checkpoint_every`` paces the table and view Integrals only:
     their raw deltas are merged every ``checkpoint_every`` steps into
     consolidated runs, and a merge takes in only the runs of no more
@@ -5379,7 +5426,7 @@ class IncrementalProgram:
             name: Integral(z, checkpoint_every) for name, z in self._zero.items()
         }
         # Integrated state of each view (created on its first step).
-        self._view_state: dict[str, Integral] = {}
+        self._view_state: dict[str, Integral | _AggViewState] = {}
         self._steps = 0
         self._checkpoint_every = checkpoint_every
         # observability: # of steps where a recursive view warm-started
@@ -5632,28 +5679,19 @@ class IncrementalProgram:
                 z = delta_of(op.src)
                 if op.pre_sel is not None:
                     z = ZSet(_apply_linear(z.df, op.pre_sel, None))
-                d = op.op.step(z)
                 # having may reference hidden __hN aggregate columns:
-                # filter before projecting them away
-                if op.having is not None:
-                    d = d.filter(op.having)
-                d = d.map(*[F.col(c) for c in op.out_cols])
+                # it filters before the projection drops them
+                d = _agg_view_rows(op, op.op.step(z))
             elif isinstance(op, _DistinctAggOp):
                 z = ZSet(
                     _apply_linear(delta_of(op.src).df, op.dist_sel, op.where)
                 ).consolidate()
-                d = op.agg_op.step(op.distinct_op.step(z))
-                if op.having is not None:
-                    d = d.filter(op.having)
-                d = d.map(*[F.col(c) for c in op.out_cols])
+                d = _agg_view_rows(op, op.agg_op.step(op.distinct_op.step(z)))
             elif isinstance(op, _JoinAggOp):
                 # the aggregate sums weights: it takes the join delta
                 # unconsolidated, sparing a shuffle of every join column
                 jd = op.join_op.step_unconsolidated(delta_of(op.src_a), delta_of(op.src_b))
-                d = op.agg_op.step(jd)
-                if op.having is not None:
-                    d = d.filter(op.having)
-                d = d.map(*[F.col(c) for c in op.out_cols])
+                d = _agg_view_rows(op, op.agg_op.step(jd))
             elif isinstance(op, _WinFnOp):
                 d = op.op.step(delta_of(op.src))
                 d = d.map(*[F.col(c) for c in op.out_cols])
@@ -5677,10 +5715,7 @@ class IncrementalProgram:
                     jd = op.join_op.step_unconsolidated(da, db)
                 else:
                     jd = op.join_op.step(da, db)
-                d = op.agg_op.step(jd)
-                if op.having is not None:
-                    d = d.filter(op.having)
-                d = d.map(*[F.expr(i) for i in op.sel_exprs])
+                d = _agg_view_rows(op, op.agg_op.step(jd))
             elif isinstance(op, _OuterJoinOp):
                 d = op.op.step(delta_of(op.src_a), delta_of(op.src_b))
             elif isinstance(op, _DistinctOp):
@@ -5744,10 +5779,7 @@ class IncrementalProgram:
                 for j, stage in enumerate(op.ops, start=1):
                     last = j == len(op.ops)
                     jd = (stage.step_unconsolidated if last else stage.step)(jd, _aleg(j))
-                d = op.agg_op.step(jd)
-                if op.having is not None:
-                    d = d.filter(op.having)
-                d = d.map(*[F.expr(i) for i in op.sel_exprs])
+                d = _agg_view_rows(op, op.agg_op.step(jd))
             elif isinstance(op, _SetOpOp):
                 src_a, sel_a, where_a = op.part_a
                 src_b, sel_b, where_b = op.part_b
@@ -5960,7 +5992,11 @@ class IncrementalProgram:
                 # views below land in its catalog even when d comes from
                 # a foreachBatch (cloned-session) delta
                 zero = ZSet.empty(self.spark.createDataFrame([], d.df.schema))
-                integ = Integral(zero, self._checkpoint_every)
+                agg = _linear_agg(op)
+                if agg is not None:
+                    integ = _AggViewState(zero, op, agg)
+                else:
+                    integ = Integral(zero, self._checkpoint_every)
                 self._view_state[view.name] = integ
             integ.add(d)
             if self._has_naive:

@@ -226,15 +226,19 @@ class IncrementalLinearAgg:
         self.specs = specs
         self.cond = cond
         self._state: DataFrame | None = None  # keys + __cnt + per-spec sums
-        # sum column of the state -> its type, fixed at the first step
-        self._types: dict = {}
         self._zero: ZSet | None = None
+        # the Columns of a step, built once at the first step (they name
+        # columns only, so every step's frames can share them)
+        self._contrib: list[Column] = []
+        self._agg: list[Column] = []
+        self._retract: tuple[Column, list[Column]] | None = None
+        self._insert: tuple[Column, list[Column]] | None = None
+        self._next_state: list[Column] = []
 
     # -- internal helpers -------------------------------------------------
-    def _contributions(self, delta: ZSet) -> DataFrame:
-        """The delta's rows as keys plus, per state column, the row's
-        weighted contribution to that column's sum."""
-        z = delta if self.cond is None else delta.filter(self.cond)
+    def _contribution_cols(self) -> list[Column]:
+        """Per state column, a delta row's weighted contribution to that
+        column's sum."""
         w = F.col(WEIGHT)
         cols = [w.alias("__cnt")]
         for i, s in enumerate(self.specs):
@@ -243,7 +247,12 @@ class IncrementalLinearAgg:
             if s.kind != "count":
                 cols.append((s.expr * w).alias(f"__s{i}"))
             cols.append(F.when(s.expr.isNotNull(), w).otherwise(F.lit(0)).alias(f"__c{i}"))
-        return z.df.select(*self.keys, *cols)
+        return cols
+
+    def _contributions(self, delta: ZSet) -> DataFrame:
+        """The delta's rows as keys plus their contribution columns."""
+        z = delta if self.cond is None else delta.filter(self.cond)
+        return z.df.select(*self.keys, *self._contrib)
 
     def _finish(self, prefix: str) -> list[Column]:
         """Finished output columns, named by the specs, from state
@@ -266,68 +275,76 @@ class IncrementalLinearAgg:
             cols.append(col)
         return cols
 
-    def _rows(self, df: DataFrame, prefix: str, weight: int) -> DataFrame:
-        finished = [c.alias(s.alias) for c, s in zip(self._finish(prefix), self.specs)]
-        return df.select(*self.keys, *finished, F.lit(weight).cast("long").alias(WEIGHT))
+    def _row_cols(self, finished: list[Column], weight: int) -> list[Column]:
+        named = [c.alias(s.alias) for c, s in zip(finished, self.specs)]
+        return [*self.keys, *named, F.lit(weight).cast("long").alias(WEIGHT)]
 
-    def _merged(self, delta: ZSet) -> DataFrame:
-        """One row per group of the state or the delta: ``__touched``,
-        then each state column's sum before (``old…``) and after
-        (``new…``) the delta, in the state's types. One aggregate over
-        state ∪ contribution rows, so one shuffle."""
-        rows = self._state.withColumn("__d", F.lit(False)).unionByName(
-            self._contributions(delta).withColumn("__d", F.lit(True))
-        )
-        old = {c: F.sum(F.when(~F.col("__d"), F.col(c))).cast(t) for c, t in self._types.items()}
-        new = {c: F.sum(c).cast(t) for c, t in self._types.items()}
+    def _build(self, types: dict[str, str]) -> None:
+        """The step's Columns. ``types`` maps each state column to the SQL
+        type name of its sum, which every merge casts back to: a decimal
+        sum over the state would otherwise widen every step."""
+        # One row per group of the state or the delta: __touched, then
+        # each state column's sum before (old…) and after (new…) the
+        # delta, in the state's types.
+        old = {c: F.sum(F.when(~F.col("__d"), F.col(c))).cast(t) for c, t in types.items()}
+        new = {c: F.sum(c).cast(t) for c, t in types.items()}
         for i, s in enumerate(self.specs):
             if s.kind in ("sum", "avg"):
                 # SQL: a group with no non-null value has a NULL sum,
                 # also when its contributions cancel (+x then -x)
                 new[f"__s{i}"] = F.when(new[f"__c{i}"] != 0, new[f"__s{i}"])
-        return rows.groupBy(*self.keys).agg(
+        self._agg = [
             F.max("__d").alias("__touched"),
             *[e.alias(f"old{c}") for c, e in old.items()],
             *[e.alias(f"new{c}") for c, e in new.items()],
+        ]
+        old_live = F.coalesce(F.col("old__cnt"), F.lit(0)) > 0
+        new_live = F.col("new__cnt") > 0
+        old_row, new_row = self._finish("old"), self._finish("new")
+        same = reduce(operator.and_, [o.eqNullSafe(n) for o, n in zip(old_row, new_row)])
+        # a touched group whose finished row is unchanged emits nothing:
+        # its retraction and insertion would cancel
+        changed = F.col("__touched") & ~(old_live & new_live & same)
+        self._retract = (changed & old_live, self._row_cols(old_row, -1))
+        self._insert = (changed & new_live, self._row_cols(new_row, 1))
+        self._next_state = [*self.keys, *[F.col(f"new{c}").alias(c) for c in types]]
+
+    def _merged(self, delta: ZSet) -> DataFrame:
+        """One aggregate over state ∪ contribution rows, so one shuffle."""
+        rows = self._state.withColumn("__d", F.lit(False)).unionByName(
+            self._contributions(delta).withColumn("__d", F.lit(True))
         )
+        return rows.groupBy(*self.keys).agg(*self._agg)
 
     # -- the operator ------------------------------------------------------
     def step(self, delta: ZSet) -> ZSet:
         if self._state is None:
-            # The empty state fixes the state column types as the sums'
-            # types; each merge casts back to them, because a decimal
-            # sum over the state would otherwise widen every step.
+            # the empty state fixes each state column's type as its sum's type
+            self._contrib = self._contribution_cols()
             contrib = self._contributions(delta)
             self._state = contrib.groupBy(*self.keys).agg(
                 *[F.sum(c).alias(c) for c in contrib.columns[len(self.keys):]]
             ).limit(0)
             sums = self._state.schema.fields[len(self.keys):]
-            self._types = {f.name: f.dataType for f in sums}
-            self._zero = ZSet.empty(self._rows(self._state, "", 1))
+            # as SQL type names: a cast to a name is one call to the JVM
+            self._build({f.name: f.dataType.simpleString() for f in sums})
+            self._zero = ZSet.empty(self._state.select(*self._row_cols(self._finish(""), 1)))
         if delta.is_empty:
             return self._zero
         merged = self._merged(delta).localCheckpoint(eager=False)
-
-        old_live = F.coalesce(F.col("old__cnt"), F.lit(0)) > 0
-        new_live = F.col("new__cnt") > 0
-        same = reduce(
-            operator.and_,
-            [o.eqNullSafe(n) for o, n in zip(self._finish("old"), self._finish("new"))],
+        (retract_if, retract), (insert_if, insert) = self._retract, self._insert
+        self._state = merged.where(F.col("new__cnt") != 0).select(*self._next_state)
+        return ZSet(
+            merged.where(retract_if).select(*retract).unionByName(
+                merged.where(insert_if).select(*insert)
+            )
         )
-        # a touched group whose finished row is unchanged emits nothing:
-        # its retraction and insertion would cancel
-        changed = F.col("__touched") & ~(old_live & new_live & same)
-        retract = self._rows(merged.where(changed & old_live), "old", -1)
-        insert = self._rows(merged.where(changed & new_live), "new", 1)
-        self._state = merged.where(F.col("new__cnt") != 0).select(
-            *self.keys, *[F.col(f"new{c}").alias(c) for c in self._types]
-        )
-        return ZSet(retract.unionByName(insert))
 
     def snapshot(self) -> DataFrame:
         if self._state is None:
             raise ValueError("no steps applied")
-        return self._rows(self._state.where(F.col("__cnt") > 0), "", 1).drop(WEIGHT)
+        live = self._state.where(F.col("__cnt") > 0)
+        return live.select(*self._row_cols(self._finish(""), 1)).drop(WEIGHT)
 
 
 class IncrementalJoin:

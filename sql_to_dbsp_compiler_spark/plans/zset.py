@@ -258,8 +258,21 @@ def _compact(parts: list[ZSet]) -> ZSet:
     """Consolidate a sum of Z-sets and cut its lineage. This is the only
     place integrated state is compacted: under AQE ``localCheckpoint``
     is an action even with ``eager=False`` (it runs every shuffle stage
-    of the plan at call time), so it must not run on every step."""
-    return ZSet(_sum(parts).consolidate().df.localCheckpoint(eager=False))
+    of the plan at call time), so it must not run on every step.
+
+    A sum whose estimated size is within the session's broadcast
+    threshold is consolidated in one task, with no shuffle: the small
+    merges of a few step deltas then run one stage instead of two."""
+    df = _sum(parts).df
+    if _estimated_bytes(df) <= _one_task_bytes(df):
+        df = df.coalesce(1)
+    return ZSet(ZSet(df).consolidate().df.localCheckpoint(eager=False))
+
+
+def _one_task_bytes(df: DataFrame) -> int:
+    """The largest frame Spark treats as small enough to handle whole:
+    ``spark.sql.autoBroadcastJoinThreshold`` (-1 when disabled)."""
+    return int(df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
 
 
 # ---- stream-of-snapshots operators ------------------------------------
